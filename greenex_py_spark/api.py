@@ -36,12 +36,9 @@ LANDCOVER_CLASSES = list(city.LC_CLASSES)
 
 
 def _resolve_buffer(geom_type: str, buffer_type, buffer_dist, trip_time, travel_speed):
-    if geom_type == "Point" and buffer_type not in ["euclidean", "network"]:
-        raise ValueError(
-            "Please make sure that the buffer_type argument is set to either "
-            "'euclidean' or 'network' and re-run the function"
-        )
-    if buffer_type is not None and buffer_type not in ["euclidean", "network"]:
+    if buffer_type not in ["euclidean", "network"] and (
+        geom_type == "Point" or buffer_type is not None
+    ):
         raise ValueError(
             "Please make sure that the buffer_type argument is set to either "
             "'euclidean' or 'network' and re-run the function"
@@ -145,6 +142,21 @@ def _apply_polygon_type(poi: DataFrame, geom_type: str, polygon_type: str):
     return poi, geom_type
 
 
+def _prepare_availability(
+    point_of_interest: DataFrame, polygon_type: str,
+    buffer_type, buffer_dist, trip_time, travel_speed,
+) -> tuple[DataFrame, str, float]:
+    """The availability functions' shared preamble: geometry check,
+    polygon_type conversion, buffer validation, id assignment.  Returns
+    (poi with id, geometry type, resolved buffer distance)."""
+    geom_type = _geom_type(point_of_interest)
+    point_of_interest, geom_type = _apply_polygon_type(
+        point_of_interest, geom_type, polygon_type
+    )
+    buffer_dist = _resolve_buffer(geom_type, buffer_type, buffer_dist, trip_time, travel_speed)
+    return _ensure_id(point_of_interest), geom_type, buffer_dist
+
+
 def _aoi_for(poi, geom_type, buffer_type, buffer_dist, nodes, edges):
     from .operators.zonal import aoi_circle, aoi_isochrone, aoi_polygon
 
@@ -176,12 +188,9 @@ def get_mean_NDVI(
     """→ poi + [mean_NDVI, std_NDVI] (availability.py:41-342)."""
     from .operators.zonal import zonal_stats_aoi
 
-    geom_type = _geom_type(point_of_interest)
-    point_of_interest, geom_type = _apply_polygon_type(
-        point_of_interest, geom_type, polygon_type
+    poi, geom_type, buffer_dist = _prepare_availability(
+        point_of_interest, polygon_type, buffer_type, buffer_dist, trip_time, travel_speed
     )
-    buffer_dist = _resolve_buffer(geom_type, buffer_type, buffer_dist, trip_time, travel_speed)
-    poi = _ensure_id(point_of_interest)
     aoi = _aoi_for(poi, geom_type, buffer_type, buffer_dist, network_nodes, network_edges)
     stats = zonal_stats_aoi(aoi, ndvi_tiles, stat="mean_std", clip_min0=True, out_prefix="NDVI")
     return poi.join(stats, "id", "left")
@@ -203,12 +212,9 @@ def get_landcover_percentages(
     (availability.py:344-597)."""
     from .operators.zonal import zonal_stats_aoi
 
-    geom_type = _geom_type(point_of_interest)
-    point_of_interest, geom_type = _apply_polygon_type(
-        point_of_interest, geom_type, polygon_type
+    poi, geom_type, buffer_dist = _prepare_availability(
+        point_of_interest, polygon_type, buffer_type, buffer_dist, trip_time, travel_speed
     )
-    buffer_dist = _resolve_buffer(geom_type, buffer_type, buffer_dist, trip_time, travel_speed)
-    poi = _ensure_id(point_of_interest)
     aoi = _aoi_for(poi, geom_type, buffer_type, buffer_dist, network_nodes, network_edges)
     stats = zonal_stats_aoi(
         aoi, landcover_tiles, stat="classes",
@@ -230,12 +236,9 @@ def get_canopy_percentage(
     canopy polygons, availability.py:600-806)."""
     from .operators.zonal import cover_percentage_circle32
 
-    geom_type = _geom_type(point_of_interest)
-    point_of_interest, geom_type = _apply_polygon_type(
-        point_of_interest, geom_type, polygon_type
+    poi, _, buffer_dist = _prepare_availability(
+        point_of_interest, polygon_type, buffer_type, buffer_dist, trip_time, travel_speed
     )
-    buffer_dist = _resolve_buffer(geom_type, buffer_type, buffer_dist, trip_time, travel_speed)
-    poi = _ensure_id(point_of_interest)
     out = cover_percentage_circle32(
         poi, canopy_layer, float(buffer_dist), id_col="id", out_col="canopy_cover"
     )
@@ -257,12 +260,9 @@ def get_greenspace_percentage(
     buffers take the vector 32-gon clip path; network buffers the
     isochrone raster-mask path (documented raster-level equivalence of
     make_iso_poly)."""
-    geom_type = _geom_type(point_of_interest)
-    point_of_interest, geom_type = _apply_polygon_type(
-        point_of_interest, geom_type, polygon_type
+    poi, _, buffer_dist = _prepare_availability(
+        point_of_interest, polygon_type, buffer_type, buffer_dist, trip_time, travel_speed
     )
-    buffer_dist = _resolve_buffer(geom_type, buffer_type, buffer_dist, trip_time, travel_speed)
-    poi = _ensure_id(point_of_interest)
     if buffer_type == "network":
         from .operators.network import greenspace_pct_isochrone
 

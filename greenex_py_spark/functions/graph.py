@@ -2340,15 +2340,18 @@ def _louvain_phase(und: DataFrame, selfw: DataFrame | None, rounds: int) -> Data
     ties by smallest community label, a move needs a STRICT improvement
     over staying (with i removed from its own community), and all
     ELIGIBLE nodes move simultaneously — so the result is a pure
-    function of the graph, never of visit order.  Eligibility
-    alternates by md5 parity of the node label (round r moves only
-    nodes with parity r mod 2): unrestricted simultaneous moves
-    label-swap forever on symmetric motifs (two nodes adopting each
-    other's community every round — observed on a plain triangle);
-    parity gating is the standard coloring-style mitigation
-    distributed Louvain implementations use, and md5 parity is
-    portable to the DuckDB oracle.  Fixed round count, one
-    localCheckpoint per round (the iterative-lineage rule).
+    function of the graph, never of visit order.  Eligibility is an
+    8-bit round colouring: each node's ``par`` is the first md5 byte of
+    its label (``conv(substring(md5(i), 1, 2), 16, 10)``), and round r
+    moves only nodes whose bit ``r mod 8`` of ``par`` is set.
+    Unrestricted simultaneous moves label-swap forever on symmetric
+    motifs (two nodes adopting each other's community every round —
+    observed on a plain triangle); with 8 independent colourings two
+    adjacent nodes share every colour only with probability 1/256, so
+    some round moves one endpoint without the other.  Colouring is the
+    standard mitigation distributed Louvain implementations use, and
+    the md5 byte is portable to the DuckDB oracle.  Fixed round count,
+    one localCheckpoint per round (the iterative-lineage rule).
     """
     sym = und.select(
         F.col("a").alias("i"), F.col("b").alias("j"), "w"

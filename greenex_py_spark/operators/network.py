@@ -561,6 +561,47 @@ def isochrone_edges(
     )
 
 
+def _capsule_union(X, Y, ax, ay, bx, by, edge_buff: float) -> np.ndarray:
+    """Pixel centres (X, Y) within ``edge_buff`` of any segment
+    (ax, ay)→(bx, by): the raster union of the segments' capsules."""
+    mask = np.zeros(X.shape, dtype=bool)
+    for k in range(len(ax)):
+        dx, dy = bx[k] - ax[k], by[k] - ay[k]
+        l2 = dx * dx + dy * dy or 1.0
+        t = np.clip(((X - ax[k]) * dx + (Y - ay[k]) * dy) / l2, 0.0, 1.0)
+        d2 = (X - (ax[k] + t * dx)) ** 2 + (Y - (ay[k] + t * dy)) ** 2
+        mask |= d2 <= edge_buff * edge_buff
+    return mask
+
+
+def _fill_holes(mask: np.ndarray) -> np.ndarray:
+    """``mask`` plus its holes: the unmasked pixels not 4-connected to
+    the window border through other unmasked pixels."""
+    if not mask.any():
+        return mask
+    # flood-fill the outside from the window border.  Vectorized
+    # iterative dilation — identical reachability to a per-pixel BFS
+    # (which spent ~15 ms/PoI in Python loops), each pass is four
+    # shifted ORs over the whole window.
+    free = ~mask
+    outside = np.zeros_like(mask)
+    outside[0, :] = free[0, :]
+    outside[-1, :] |= free[-1, :]
+    outside[:, 0] |= free[:, 0]
+    outside[:, -1] |= free[:, -1]
+    while True:
+        grow = outside.copy()
+        grow[1:, :] |= outside[:-1, :]
+        grow[:-1, :] |= outside[1:, :]
+        grow[:, 1:] |= outside[:, :-1]
+        grow[:, :-1] |= outside[:, 1:]
+        grow &= free
+        if np.array_equal(grow, outside):
+            break
+        outside = grow
+    return ~outside
+
+
 def isochrone_raster_mask(
     seg_pdf: pd.DataFrame,
     res: float,
@@ -568,7 +609,6 @@ def isochrone_raster_mask(
     origin_y: float,
     npx: int,
     edge_buff: float = 25.0,
-    fill_holes: bool = True,
 ) -> tuple[np.ndarray, tuple[int, int]]:
     """Rasterized isochrone AoI: union of ``edge_buff``-capsules around
     the segments, with interior holes filled — the raster-level
@@ -590,37 +630,7 @@ def isochrone_raster_mask(
     cx = origin_x + (np.arange(ix0, ix1 + 1) + 0.5) * res
     cy = origin_y + (np.arange(iy0, iy1 + 1) + 0.5) * res
     X, Y = np.meshgrid(cx, cy)
-    mask = np.zeros(X.shape, dtype=bool)
-    for k in range(len(ax)):
-        dx, dy = bx[k] - ax[k], by[k] - ay[k]
-        l2 = dx * dx + dy * dy or 1.0
-        t = np.clip(((X - ax[k]) * dx + (Y - ay[k]) * dy) / l2, 0.0, 1.0)
-        d2 = (X - (ax[k] + t * dx)) ** 2 + (Y - (ay[k] + t * dy)) ** 2
-        mask |= d2 <= edge_buff * edge_buff
-    if fill_holes and mask.any():
-        # flood-fill the outside from the window border (4-connected);
-        # holes = ~mask not reachable from the border.  Vectorized
-        # iterative dilation — identical reachability to the old
-        # per-pixel BFS (which spent ~15 ms/PoI in Python loops), each
-        # pass is four shifted ORs over the whole window.
-        free = ~mask
-        outside = np.zeros_like(mask)
-        outside[0, :] = free[0, :]
-        outside[-1, :] |= free[-1, :]
-        outside[:, 0] |= free[:, 0]
-        outside[:, -1] |= free[:, -1]
-        while True:
-            grow = outside.copy()
-            grow[1:, :] |= outside[:-1, :]
-            grow[:-1, :] |= outside[1:, :]
-            grow[:, 1:] |= outside[:, :-1]
-            grow[:, :-1] |= outside[:, 1:]
-            grow &= free
-            if np.array_equal(grow, outside):
-                break
-            outside = grow
-        mask = ~outside
-    return mask, (ix0, iy0)
+    return _fill_holes(_capsule_union(X, Y, ax, ay, bx, by, edge_buff)), (ix0, iy0)
 
 
 def _rasterize_rects_window(
@@ -708,8 +718,6 @@ def greenspace_pct_isochrone(
     PoIs whose ego set yields no edges get a null cover (the reference
     emits None → NaN metrics, availability.py:282-283).
     """
-    from .network import isochrone_edges, isochrone_raster_mask  # self-import ok
-
     if origin_x is None or origin_y is None or npx is None:
         nb = nodes.select(
             F.min("x").alias("x0"), F.min("y").alias("y0"),

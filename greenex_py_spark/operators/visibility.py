@@ -311,8 +311,10 @@ def streetview_gvi_aggregate(
     """[id, GVI, nr_of_points] — A6 aggregation (visibility.py:1040-1052):
     per-point GVI table (external segmentation output) PiP-joined to PoI
     circular buffers; pandas groupby mean/count semantics (NaN GVI rows
-    excluded from BOTH mean and count)."""
-    pts = gvi_points.filter(F.col("GVI").isNotNull())
+    excluded from BOTH mean and count).  Only ``x, y, GVI`` of the image
+    table are read, so an image-side ``id`` column cannot clash with the
+    PoI id."""
+    pts = gvi_points.select("x", "y", "GVI").filter(F.col("GVI").isNotNull())
     b = buffers.select(
         F.col(id_col).alias("id"), F.col("x").alias("bx"), F.col("y").alias("by")
     )

@@ -31,43 +31,43 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..geo.grid import GridSpec
 
 
-def _with_tile_span(points: DataFrame, radius: float, id_col: str, grid: GridSpec) -> DataFrame:
-    """Explode each point to the raster tiles its buffer touches."""
-    tile_m = grid.tile_m
-    tx0 = F.greatest(F.lit(0), F.floor((F.col("x") - radius - grid.origin_x) / tile_m)).cast("int")
-    tx1 = F.least(F.lit(grid.n_tiles_x - 1), F.floor((F.col("x") + radius - grid.origin_x) / tile_m)).cast("int")
-    ty0 = F.greatest(F.lit(0), F.floor((F.col("y") - radius - grid.origin_y) / tile_m)).cast("int")
-    ty1 = F.least(F.lit(grid.n_tiles_y - 1), F.floor((F.col("y") + radius - grid.origin_y) / tile_m)).cast("int")
+def _tile_span(df: DataFrame, lo_x, lo_y, hi_x, hi_y, grid: GridSpec) -> DataFrame:
+    """Explode each row to the raster tiles its bbox [lo, hi] touches."""
+
+    def span(lo, hi, origin: float, n_tiles: int):
+        return F.sequence(
+            F.greatest(F.lit(0), F.floor((lo - origin) / grid.tile_m)).cast("int"),
+            F.least(F.lit(n_tiles - 1), F.floor((hi - origin) / grid.tile_m)).cast("int"),
+        )
+
     return (
-        points.select(id_col, "x", "y")
-        .withColumn("ty", F.explode(F.sequence(ty0, ty1)))
-        .withColumn("tx", F.explode(F.sequence(tx0, tx1)))
+        df.withColumn("ty", F.explode(span(lo_y, hi_y, grid.origin_y, grid.n_tiles_y)))
+        .withColumn("tx", F.explode(span(lo_x, hi_x, grid.origin_x, grid.n_tiles_x)))
     )
 
 
-def _circle_mask_stats(left: pd.DataFrame, right: pd.DataFrame, radius: float,
-                       clip_min0: bool, classes: bool,
-                       quantize_scale: float | None = None) -> pd.DataFrame:
-    """Per-(tile,point) partials. ``left`` = points, ``right`` = the tile."""
+def _circle_windows(left: pd.DataFrame, right: pd.DataFrame, radius: float):
+    """Unpack one raster tile (``right``) and yield ``(id, v, d2, m)``
+    for each point of ``left`` whose circle holds at least one of the
+    tile's pixel centres: the in-circle pixel values, the squared
+    distances of the point's pixel window to the point and the window's
+    in-circle mask (``d2[m]`` lines up with ``v``)."""
     if len(left) == 0 or len(right) == 0:
-        cols = (["id", "cls", "cnt"] if classes else ["id", "s", "s2", "n"])
-        return pd.DataFrame({c: [] for c in cols})
+        return
     t = right.iloc[0]
     w, h, res = int(t["w"]), int(t["h"]), float(t["res"])
     x0, y0 = float(t["x0"]), float(t["y0"])
     px = np.asarray(t["px"], dtype=np.float64).reshape(h, w)
-    xs = left["x"].to_numpy(np.float64)
-    ys = left["y"].to_numpy(np.float64)
-    ids = left["id"].to_numpy(np.int64)
-    out: list[tuple] = []
     r2 = radius * radius
-    for pid, x, y in zip(ids, xs, ys):
+    for pid, x, y in zip(left["id"].to_numpy(np.int64),
+                         left["x"].to_numpy(np.float64),
+                         left["y"].to_numpy(np.float64)):
         # sub-window of candidate pixels (clip to tile extent)
         i0 = max(0, int(np.floor((x - radius - x0) / res - 0.5)))
         i1 = min(w - 1, int(np.floor((x + radius - x0) / res)))
@@ -77,32 +77,71 @@ def _circle_mask_stats(left: pd.DataFrame, right: pd.DataFrame, radius: float,
             continue
         cx = x0 + (np.arange(i0, i1 + 1) + 0.5) * res
         cy = y0 + (np.arange(j0, j1 + 1) + 0.5) * res
-        m = ((cx[None, :] - x) ** 2 + (cy[:, None] - y) ** 2) <= r2
-        if not m.any():
-            continue
-        v = px[j0:j1 + 1, i0:i1 + 1][m]
-        if classes:
-            if quantize_scale is not None:
-                # continuous values → fixed-precision integer buckets
-                # (floor(v·scale + 0.5): IEEE-exact for |v·scale| < 2^52,
-                # the same quantizer the SQL oracles use)
-                vi = np.floor(v * quantize_scale + 0.5).astype(np.int64)
-            else:
-                vi = v.astype(np.int64)
-            if len(vi) and vi.min() >= 0 and vi.max() < 65536:
-                # bincount histogram ~10× np.unique on small class codes
-                cnts = np.bincount(vi)
-                cls = np.nonzero(cnts)[0]
-                out.extend((pid, int(c), int(cnts[c])) for c in cls)
-            else:
-                cls, cnt = np.unique(vi, return_counts=True)
-                out.extend((pid, int(c), int(n)) for c, n in zip(cls, cnt))
-        else:
-            if clip_min0:
-                v = np.maximum(v, 0.0)
-            out.append((pid, float(v.sum()), float((v * v).sum()), int(v.size)))
-    cols = (["id", "cls", "cnt"] if classes else ["id", "s", "s2", "n"])
-    return pd.DataFrame(out, columns=cols) if out else pd.DataFrame({c: [] for c in cols})
+        d2 = (cx[None, :] - x) ** 2 + (cy[:, None] - y) ** 2
+        m = d2 <= r2
+        if m.any():
+            yield pid, px[j0:j1 + 1, i0:i1 + 1][m], d2, m
+
+
+def _circle_partials(points: DataFrame, tiles: DataFrame, radius: float, id_col: str,
+                     grid: GridSpec | None, emit, schema: str) -> DataFrame:
+    """Tile-local partials of the circle operators: each point meets the
+    tiles its buffer touches (cogroup on tile id), and
+    ``emit(id, v, d2, m)`` turns each :func:`_circle_windows` item into
+    rows of ``schema``.
+    ``grid`` defaults to :func:`GridSpec.from_tiles`."""
+    grid = grid or GridSpec.from_tiles(tiles)
+    x, y = F.col("x"), F.col("y")
+    spanned = _tile_span(
+        points.select(id_col, "x", "y"), x - radius, y - radius, x + radius, y + radius, grid
+    ).withColumnRenamed(id_col, "id")
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        rows = [row for item in _circle_windows(left, right, radius) for row in emit(*item)]
+        return pd.DataFrame(rows, columns=cols)
+
+    return (
+        spanned.groupBy("tx", "ty")
+        .cogroup(tiles.groupBy("tx", "ty"))
+        .applyInPandas(kernel, schema=schema)
+    )
+
+
+def _class_counts(pid, v: np.ndarray, *_) -> list[tuple]:
+    """(id, class, pixel count) rows for one point's class-coded pixels."""
+    vi = v.astype(np.int64)
+    if vi.min() >= 0 and vi.max() < 65536:
+        # bincount histogram ~10× np.unique on small class codes
+        cnts = np.bincount(vi)
+        return [(pid, int(c), int(cnts[c])) for c in np.nonzero(cnts)[0]]
+    cls, cnt = np.unique(vi, return_counts=True)
+    return [(pid, int(c), int(n)) for c, n in zip(cls, cnt)]
+
+
+def _mean_std(s, s2, n):
+    """Rounded mean and population std (ddof=0) column expressions from
+    sum, sum of squares and count (availability.py:289)."""
+    mean = s / n
+    var = s2 / n - mean * mean
+    # guard tiny negative variance from FP cancellation
+    std = F.sqrt(F.greatest(var, F.lit(0.0)))
+    return F.round(mean, 3), F.round(std, 3)
+
+
+def _class_pct_pivot(partials: DataFrame, class_values: list[int], col_prefix: str) -> DataFrame:
+    """[id, <col_prefix><v> ...] from (id, cls, cnt) partials: each class's
+    share of the id's pixels as a ``"<v>%"`` string, round 3, and
+    ``"0.0%"`` for absent classes (availability.py:553-560)."""
+    counts = partials.groupBy("id", "cls").agg(F.sum("cnt").alias("cnt"))
+    total = F.sum("cnt").over(Window.partitionBy("id"))
+    pct = counts.withColumn(
+        "pct", F.concat(F.round(F.col("cnt") / total * 100.0, 3).cast("string"), F.lit("%"))
+    )
+    pivoted = pct.groupBy("id").pivot("cls", class_values).agg(F.first("pct"))
+    return pivoted.select(
+        "id", *[F.coalesce(F.col(str(v)), F.lit("0.0%")).alias(f"{col_prefix}{v}") for v in class_values]
+    )
 
 
 def zonal_mean_std(
@@ -118,28 +157,18 @@ def zonal_mean_std(
 
     ``grid`` defaults to :func:`GridSpec.from_tiles` (recovered from the
     tile table's own metadata — pass it explicitly to skip those jobs)."""
-    grid = grid or GridSpec.from_tiles(tiles)
-    spanned = _with_tile_span(points, radius, id_col, grid).withColumnRenamed(id_col, "id")
 
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return _circle_mask_stats(left, right, radius, clip_min0, classes=False)
+    def emit(pid, v, *_):
+        if clip_min0:
+            v = np.maximum(v, 0.0)
+        return [(pid, float(v.sum()), float((v * v).sum()), int(v.size))]
 
-    partials = (
-        spanned.groupBy("tx", "ty")
-        .cogroup(tiles.groupBy("tx", "ty"))
-        .applyInPandas(kernel, schema="id long, s double, s2 double, n long")
-    )
-    n = F.sum("n")
-    mean = F.sum("s") / n
-    var = F.sum("s2") / n - mean * mean
-    # guard tiny negative variance from FP cancellation
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))
+    partials = _circle_partials(points, tiles, radius, id_col, grid, emit,
+                                "id long, s double, s2 double, n long")
+    mean, std = _mean_std(F.sum("s"), F.sum("s2"), F.sum("n"))
     return (
         partials.groupBy("id")
-        .agg(
-            F.round(mean, 3).alias(f"mean_{out_prefix}"),
-            F.round(std, 3).alias(f"std_{out_prefix}"),
-        )
+        .agg(mean.alias(f"mean_{out_prefix}"), std.alias(f"std_{out_prefix}"))
         .withColumnRenamed("id", id_col)
     )
 
@@ -154,33 +183,9 @@ def zonal_class_percentages(
     grid: GridSpec | None = None,
 ) -> DataFrame:
     """[id, class_<v>% ...] — landcover class percentage pivot (A2)."""
-    grid = grid or GridSpec.from_tiles(tiles)
-    spanned = _with_tile_span(points, radius, id_col, grid).withColumnRenamed(id_col, "id")
-
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return _circle_mask_stats(left, right, radius, 0, classes=True)
-
-    partials = (
-        spanned.groupBy("tx", "ty")
-        .cogroup(tiles.groupBy("tx", "ty"))
-        .applyInPandas(kernel, schema="id long, cls long, cnt long")
-    )
-    counts = partials.groupBy("id", "cls").agg(F.sum("cnt").alias("cnt"))
-    from pyspark.sql import Window
-
-    total = F.sum("cnt").over(Window.partitionBy("id"))
-    pct = counts.withColumn(
-        "pct", F.concat(F.round(F.col("cnt") / total * 100.0, 3).cast("string"), F.lit("%"))
-    )
-    pivoted = (
-        pct.groupBy("id")
-        .pivot("cls", class_values)
-        .agg(F.first("pct"))
-    )
-    renamed = pivoted.select(
-        "id", *[F.coalesce(F.col(str(v)), F.lit("0.0%")).alias(f"{col_prefix}{v}") for v in class_values]
-    )
-    return renamed.withColumnRenamed("id", id_col)
+    partials = _circle_partials(points, tiles, radius, id_col, grid, _class_counts,
+                                "id long, cls long, cnt long")
+    return _class_pct_pivot(partials, class_values, col_prefix).withColumnRenamed("id", id_col)
 
 
 def zonal_ring_profile(
@@ -199,53 +204,20 @@ def zonal_ring_profile(
     as :func:`zonal_mean_std` — the kernel just keys partials by ring;
     ring membership uses IEEE sqrt (correctly rounded in every engine)
     so band assignment is portable.  Shuffle = (id, ring) partials."""
-    import numpy as np
-
-    grid = grid or GridSpec.from_tiles(tiles)
-    spanned = _with_tile_span(points, radius, id_col, grid).withColumnRenamed(id_col, "id")
     n_rings = int(np.ceil(radius / ring_width))
 
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({c: [] for c in ["id", "ring", "s", "n"]})
-        t = right.iloc[0]
-        w, h, res = int(t["w"]), int(t["h"]), float(t["res"])
-        x0, y0 = float(t["x0"]), float(t["y0"])
-        px = np.asarray(t["px"], dtype=np.float64).reshape(h, w)
+    def emit(pid, v, d2, m):
+        if clip_min0:
+            v = np.maximum(v, 0.0)
+        ring = np.floor(np.sqrt(d2[m]) / ring_width).astype(np.int64)
         out = []
-        r2 = radius * radius
-        for pid, x, y in zip(
-            left["id"].to_numpy(np.int64),
-            left["x"].to_numpy(np.float64),
-            left["y"].to_numpy(np.float64),
-        ):
-            i0 = max(0, int(np.floor((x - radius - x0) / res - 0.5)))
-            i1 = min(w - 1, int(np.floor((x + radius - x0) / res)))
-            j0 = max(0, int(np.floor((y - radius - y0) / res - 0.5)))
-            j1 = min(h - 1, int(np.floor((y + radius - y0) / res)))
-            if i1 < i0 or j1 < j0:
-                continue
-            cx = x0 + (np.arange(i0, i1 + 1) + 0.5) * res
-            cy = y0 + (np.arange(j0, j1 + 1) + 0.5) * res
-            d2 = (cx[None, :] - x) ** 2 + (cy[:, None] - y) ** 2
-            m = d2 <= r2
-            if not m.any():
-                continue
-            v = px[j0:j1 + 1, i0:i1 + 1][m]
-            if clip_min0:
-                v = np.maximum(v, 0.0)
-            ring = np.floor(np.sqrt(d2[m]) / ring_width).astype(np.int64)
-            for rk in np.unique(ring):
-                sel = ring == rk
-                out.append((pid, int(rk), float(v[sel].sum()), int(sel.sum())))
-        cols = ["id", "ring", "s", "n"]
-        return pd.DataFrame(out, columns=cols) if out else pd.DataFrame({c: [] for c in cols})
+        for rk in np.unique(ring):
+            sel = ring == rk
+            out.append((pid, int(rk), float(v[sel].sum()), int(sel.sum())))
+        return out
 
-    partials = (
-        spanned.groupBy("tx", "ty")
-        .cogroup(tiles.groupBy("tx", "ty"))
-        .applyInPandas(kernel, schema="id long, ring long, s double, n long")
-    )
+    partials = _circle_partials(points, tiles, radius, id_col, grid, emit,
+                                "id long, ring long, s double, n long")
     return (
         partials.filter(F.col("ring") < n_rings)
         .groupBy("id", "ring")
@@ -300,48 +272,13 @@ def zonal_quantiles(
     outputs, ~7× faster; a genuinely discrete raster still collapses
     to its class histogram inside ``np.unique``.
     """
-    grid = grid or GridSpec.from_tiles(tiles)
-    spanned = _with_tile_span(points, radius, id_col, grid).withColumnRenamed(id_col, "id")
-    empty = pd.DataFrame({"id": pd.Series(dtype=np.int64),
-                          "vals": pd.Series(dtype=object),
-                          "cnts": pd.Series(dtype=object)})
 
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        t = right.iloc[0]
-        w, h, res = int(t["w"]), int(t["h"]), float(t["res"])
-        x0, y0 = float(t["x0"]), float(t["y0"])
-        px = np.asarray(t["px"], dtype=np.float64).reshape(h, w)
-        r2 = radius * radius
-        rows: list[tuple] = []
-        for pid, x, y in zip(left["id"].to_numpy(np.int64),
-                             left["x"].to_numpy(np.float64),
-                             left["y"].to_numpy(np.float64)):
-            i0 = max(0, int(np.floor((x - radius - x0) / res - 0.5)))
-            i1 = min(w - 1, int(np.floor((x + radius - x0) / res)))
-            j0 = max(0, int(np.floor((y - radius - y0) / res - 0.5)))
-            j1 = min(h - 1, int(np.floor((y + radius - y0) / res)))
-            if i1 < i0 or j1 < j0:
-                continue
-            cx = x0 + (np.arange(i0, i1 + 1) + 0.5) * res
-            cy = y0 + (np.arange(j0, j1 + 1) + 0.5) * res
-            m = ((cx[None, :] - x) ** 2 + (cy[:, None] - y) ** 2) <= r2
-            if not m.any():
-                continue
-            v = px[j0:j1 + 1, i0:i1 + 1][m]
-            vi = np.floor(v * scale + 0.5).astype(np.int64)
-            u, c = np.unique(vi, return_counts=True)
-            rows.append((pid, u.tobytes(), c.astype(np.int64).tobytes()))
-        if not rows:
-            return empty
-        return pd.DataFrame(rows, columns=["id", "vals", "cnts"])
+    def emit(pid, v, *_):
+        u, c = np.unique(np.floor(v * scale + 0.5).astype(np.int64), return_counts=True)
+        return [(pid, u.tobytes(), c.astype(np.int64).tobytes())]
 
-    partials = (
-        spanned.groupBy("tx", "ty")
-        .cogroup(tiles.groupBy("tx", "ty"))
-        .applyInPandas(kernel, schema="id long, vals binary, cnts binary")
-    )
+    partials = _circle_partials(points, tiles, radius, id_col, grid, emit,
+                                "id long, vals binary, cnts binary")
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         v = np.concatenate(
@@ -561,36 +498,10 @@ def _aoi_mask(aoi_row, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
         rings = [np.asarray(rg, dtype=np.float64).reshape(-1, 2) for rg in aoi_row["rings"]]
         return points_in_polygon(X.ravel(), Y.ravel(), rings).reshape(X.shape)
     # iso: capsule union + hole fill (Polygon(exterior) raster equivalence)
-    ax = np.asarray(aoi_row["sax"], float); ay = np.asarray(aoi_row["say"], float)
-    bx = np.asarray(aoi_row["sbx"], float); by = np.asarray(aoi_row["sby"], float)
-    eb = float(aoi_row["r"])
-    mask = np.zeros(X.shape, dtype=bool)
-    for k in range(len(ax)):
-        dx, dy = bx[k] - ax[k], by[k] - ay[k]
-        l2 = dx * dx + dy * dy or 1.0
-        t = np.clip(((X - ax[k]) * dx + (Y - ay[k]) * dy) / l2, 0.0, 1.0)
-        mask |= (X - (ax[k] + t * dx)) ** 2 + (Y - (ay[k] + t * dy)) ** 2 <= eb * eb
-    if mask.any():
-        from ..operators.network import isochrone_raster_mask  # noqa: F401 (fill below)
-        outside = np.zeros_like(mask)
-        import collections
-        dq = collections.deque()
-        H, W = mask.shape
-        for i in range(H):
-            for j in (0, W - 1):
-                if not mask[i, j] and not outside[i, j]:
-                    outside[i, j] = True; dq.append((i, j))
-        for j in range(W):
-            for i in (0, H - 1):
-                if not mask[i, j] and not outside[i, j]:
-                    outside[i, j] = True; dq.append((i, j))
-        while dq:
-            i, j = dq.popleft()
-            for ni, nj in ((i - 1, j), (i + 1, j), (i, j - 1), (i, j + 1)):
-                if 0 <= ni < H and 0 <= nj < W and not mask[ni, nj] and not outside[ni, nj]:
-                    outside[ni, nj] = True; dq.append((ni, nj))
-        mask = ~outside
-    return mask
+    from .network import _capsule_union, _fill_holes
+
+    segs = [np.asarray(aoi_row[c], float) for c in ("sax", "say", "sbx", "sby")]
+    return _fill_holes(_capsule_union(X, Y, *segs, float(aoi_row["r"])))
 
 
 def zonal_stats_aoi(
@@ -608,25 +519,22 @@ def zonal_stats_aoi(
     Plan: AoI bbox → tile-span explode (codegen) → equi-join to tiles →
     ``groupBy(id)`` Arrow kernel assembles the AoI-window mosaic, builds
     the mask (circle / capsule+fill / ray-cast), emits the stat.
-    Hole-filling makes iso masks non-local, so this path groups per AoI
-    (window-sized mosaic per id) — the pure-circle cogroup path
-    (zonal_mean_std) stays the per-tile-partial fast path.
+
+    Only ``iso`` AoIs (isochrones, street edges) need the per-AoI
+    mosaic: the hole fill decides a pixel by whether it connects to the
+    window border, which no single tile can see.  ``circle`` and
+    ``polygon`` membership is per pixel, so they could take per-tile
+    partials (the circle cogroup path, :func:`zonal_mean_std`, does);
+    they run here so one plan serves a mixed AoI table and every AoI
+    gets exactly one row, null stats when no pixel centre falls inside.
     """
     grid = grid or GridSpec.from_tiles(tiles)
     tile_px, res = grid.tile_px, grid.res
     ox, oy = grid.origin_x, grid.origin_y
-    tile_m = grid.tile_m
-    tx0 = F.greatest(F.lit(0), F.floor((F.col("minx") - ox) / tile_m)).cast("int")
-    tx1 = F.least(F.lit(grid.n_tiles_x - 1), F.floor((F.col("maxx") - ox) / tile_m)).cast("int")
-    ty0 = F.greatest(F.lit(0), F.floor((F.col("miny") - oy) / tile_m)).cast("int")
-    ty1 = F.least(F.lit(grid.n_tiles_y - 1), F.floor((F.col("maxy") - oy) / tile_m)).cast("int")
-    spanned = (
-        aoi.withColumn("ty", F.explode(F.sequence(ty0, ty1)))
-        .withColumn("tx", F.explode(F.sequence(tx0, tx1)))
-    )
-    joined = spanned.join(tiles, ["tx", "ty"])
+    joined = _tile_span(
+        aoi, F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), grid
+    ).join(tiles, ["tx", "ty"])
 
-    classes = class_values or []
     npx_x, npx_y = grid.npx_x, grid.npx_y
 
     def kernel(kdf: pd.DataFrame) -> pd.DataFrame:
@@ -668,27 +576,14 @@ def zonal_stats_aoi(
 
     if stat == "classes":
         partials = joined.groupBy("id").applyInPandas(kernel, schema="id long, cls long, cnt long")
-        counts = partials.groupBy("id", "cls").agg(F.sum("cnt").alias("cnt"))
-        from pyspark.sql import Window as _W
-
-        total = F.sum("cnt").over(_W.partitionBy("id"))
-        pct = counts.withColumn(
-            "pct", F.concat(F.round(F.col("cnt") / total * 100.0, 3).cast("string"), F.lit("%"))
-        )
-        pivoted = pct.groupBy("id").pivot("cls", classes).agg(F.first("pct"))
-        return pivoted.select(
-            "id",
-            *[F.coalesce(F.col(str(vv)), F.lit("0.0%")).alias(f"{col_prefix}{vv}") for vv in classes],
-        )
+        return _class_pct_pivot(partials, class_values or [], col_prefix)
     partials = joined.groupBy("id").applyInPandas(kernel, schema="id long, s double, s2 double, n long")
     n = F.col("n")
-    mean = F.col("s") / n
-    var = F.col("s2") / n - mean * mean
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))
+    mean, std = _mean_std(F.col("s"), F.col("s2"), n)
     return partials.select(
         "id",
-        F.when(n > 0, F.round(mean, 3)).alias(f"mean_{out_prefix}"),
-        F.when(n > 0, F.round(std, 3)).alias(f"std_{out_prefix}"),
+        F.when(n > 0, mean).alias(f"mean_{out_prefix}"),
+        F.when(n > 0, std).alias(f"std_{out_prefix}"),
     )
 
 
@@ -743,21 +638,8 @@ def zonal_class_variety(
     per-id window argmax + single-pass aggregate over the dim-sized
     class table (≤ |classes| rows per point).
     """
-    from pyspark.sql import Window
-
-    grid = grid or GridSpec.from_tiles(tiles)
-    spanned = _with_tile_span(points, radius, id_col, grid).withColumnRenamed(
-        id_col, "id"
-    )
-
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return _circle_mask_stats(left, right, radius, 0, classes=True)
-
-    partials = (
-        spanned.groupBy("tx", "ty")
-        .cogroup(tiles.groupBy("tx", "ty"))
-        .applyInPandas(kernel, schema="id long, cls long, cnt long")
-    )
+    partials = _circle_partials(points, tiles, radius, id_col, grid, _class_counts,
+                                "id long, cls long, cnt long")
     counts = partials.groupBy("id", "cls").agg(F.sum("cnt").alias("cnt"))
     w = Window.partitionBy("id").orderBy(F.col("cnt").desc(), F.col("cls").asc())
     return (

@@ -59,6 +59,11 @@ def split_gpkg_blob(blob: bytes) -> tuple[int, bytes]:
     return srs_id, blob[off:]
 
 
+def _is_empty_blob(blob: bytes) -> bool:
+    """GPKG blob whose header sets the empty-geometry flag (bit 4)."""
+    return len(blob) >= 8 and blob[0:2] == b"GP" and bool((blob[3] >> 4) & 1)
+
+
 def make_gpkg_blob(wkb: bytes, srs_id: int = 0, envelope: tuple | None = None) -> bytes:
     """Standard WKB → GPKG geometry BLOB (little-endian header); the
     writer half of the round trip, also what the tests synthesize.
@@ -88,8 +93,9 @@ def read_gpkg_pdf(
     path: str, table: str | None = None, max_rows: int = MAX_GPKG_ROWS
 ) -> pd.DataFrame:
     """One feature table → pandas frame: all attribute columns verbatim
-    plus ``wkb`` (standard WKB bytes) and ``srs_id``; rows with NULL
-    geometry are dropped (the reference's dropna on geometry)."""
+    plus ``wkb`` (standard WKB bytes) and ``srs_id``; rows with NULL or
+    empty geometry are dropped (the reference's dropna on geometry,
+    accessibility.py:119-122)."""
     tables = list_feature_tables(path)
     if not tables:
         raise ValueError(f"{path} declares no GPKG feature tables")
@@ -107,9 +113,10 @@ def read_gpkg_pdf(
                 f"table {table!r} not in {path} (has {[t for t, _, _ in tables]})"
             )
         name, geom_col, _ = match[0]
+    ident = '"' + name.replace('"', '""') + '"'
     with sqlite3.connect(f"file:{path}?mode=ro", uri=True) as con:
         n = con.execute(
-            f'SELECT count(*) FROM (SELECT 1 FROM "{name}" LIMIT {max_rows + 1})'
+            f"SELECT count(*) FROM (SELECT 1 FROM {ident} LIMIT {max_rows + 1})"
         ).fetchone()[0]
         if n > max_rows:
             raise ValueError(
@@ -117,8 +124,9 @@ def read_gpkg_pdf(
                 "size is fact data — convert it to parquet instead of "
                 "onboarding through the driver-side GPKG shim"
             )
-        pdf = pd.read_sql_query(f'SELECT * FROM "{name}"', con)
-    pdf = pdf[pdf[geom_col].notna()].reset_index(drop=True)
+        pdf = pd.read_sql_query(f"SELECT * FROM {ident}", con)
+    keep = [pd.notna(b) and not _is_empty_blob(bytes(b)) for b in pdf[geom_col]]
+    pdf = pdf[keep].reset_index(drop=True)
     parsed = [split_gpkg_blob(bytes(b)) for b in pdf[geom_col]]
     pdf = pdf.drop(columns=[geom_col])
     pdf["srs_id"] = [s for s, _ in parsed]

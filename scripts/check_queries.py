@@ -1,7 +1,14 @@
-"""Ad-hoc oracle check for a subset of gate queries at one SF.
+"""Oracle check of the gate queries: the one place the engine-vs-DuckDB
+compare lives.
 
-Usage: python scripts/check_queries.py [sf_dir] q_name [q_name ...]
-Mirrors the driver's compare (rows / sorted-columns / value hash).
+Usage: python scripts/check_queries.py [sf_dir ...] [q_name ...]
+
+Leading absolute paths are scale-factor dirs (default: the sf0.01 test
+data); the rest are query names (default: every registered query).  For each dir and query it runs the Spark query and
+the DuckDB oracle over the same parquet and compares row count, sorted
+column names and the value hash of :func:`norm_frame`.  A query without
+an oracle prints ``rows-only`` and counts as a FAIL, like a mismatch.
+Prints one ``RESULT:`` line per dir; exits 1 if any dir fails.
 """
 import glob
 import hashlib
@@ -10,27 +17,36 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 import pandas as pd
-from pyspark.sql import SparkSession
 
-import __spark_entry__ as m
-
-
-def vh(p):
+def norm_frame(p: pd.DataFrame) -> pd.DataFrame:
+    """Order-insensitive normal form: columns sorted by name, floats
+    rounded to 9 dp, rows sorted, every value as its string."""
     p = p[sorted(p.columns)].copy()
     for c in p.columns:
         if p[c].dtype == "float64":
             p[c] = p[c].round(9)
     p = p.sort_values(by=list(p.columns)).reset_index(drop=True)
+    return p.astype(str)
+
+
+def vh(p: pd.DataFrame) -> str:
+    """Value hash of :func:`norm_frame`."""
     return hashlib.sha256(
-        pd.util.hash_pandas_object(p.astype(str), index=False).values.tobytes()
+        pd.util.hash_pandas_object(norm_frame(p), index=False).values.tobytes()
     ).hexdigest()
 
 
 def main():
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__ as m
+
     args = sys.argv[1:]
     sf = args.pop(0) if args and args[0].startswith("/") else "/root/testdata/sf0.01"
+    sfs = [sf]
+    while args and args[0].startswith("/"):
+        sfs.append(args.pop(0))
     names = args or sorted(m.queries().keys())
     spark = (
         SparkSession.builder.master("local[8]")
@@ -40,6 +56,19 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    failed = False
+    for sf in sfs:
+        bad = check_sf(spark, m, sf, names)
+        print("RESULT:", os.path.basename(sf.rstrip("/")), "ALL MATCH" if not bad else bad, flush=True)
+        failed |= bool(bad)
+    sys.exit(1 if failed else 0)
+
+
+def check_sf(spark, m, sf: str, names: list[str]) -> list[str]:
+    """Compare each query with its oracle at one SF dir; returns the
+    failing names."""
+    import duckdb
+
     con = duckdb.connect()
     for f in glob.glob(f"{sf}/*.parquet"):
         con.execute(
@@ -48,11 +77,11 @@ def main():
         )
     bad = []
     for name in names:
-        fn = m.queries()[name]
-        got = fn(spark, sf).toPandas()
+        got = m.queries()[name](spark, sf).toPandas()
         o = m.oracle_sql().get(name)
         if o is None:
-            print(name, "rows-only", len(got))
+            print(name, "rows-only", len(got), "FAIL")
+            bad.append(name)
             continue
         try:
             want = con.execute(o).df()
@@ -71,8 +100,7 @@ def main():
             if sorted(got.columns) != sorted(want.columns):
                 print("  spark cols:", sorted(got.columns))
                 print("  oracle cols:", sorted(want.columns))
-    print("RESULT:", "ALL MATCH" if not bad else bad)
-    sys.exit(1 if bad else 0)
+    return bad
 
 
 if __name__ == "__main__":

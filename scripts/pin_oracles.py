@@ -26,6 +26,7 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 
+from scripts.check_queries import norm_frame  # noqa: E402
 from scripts.xxh64_ref import xxh64_signed  # noqa: E402
 
 SFS = ["0.001", "0.01", "0.1"]
@@ -289,14 +290,6 @@ def expected_viewshed(docs: pd.DataFrame, replicate_bug: bool = True) -> pd.Data
 # ---------------------------------------------------------------------------
 # engine cross-check + emit
 # ---------------------------------------------------------------------------
-
-
-def norm_frame(p: pd.DataFrame) -> pd.DataFrame:
-    p = p[sorted(p.columns)].copy()
-    for c in p.columns:
-        if p[c].dtype == "float64":
-            p[c] = p[c].round(9)
-    return p.astype(str).sort_values(by=list(p.columns)).reset_index(drop=True)
 
 
 def main() -> None:

@@ -130,9 +130,12 @@ def test_viewshed_and_streetview_api(spark, pois):
                       "y": [city.Y0 + 3000.0, city.Y0 + 3010.0],
                       "GVI": [0.4, None]})
     )
-    sv = api.get_streetview_GVI(pois, gvi_pts, buffer_dist=150).toPandas()
-    row = sv[sv.url == "a"].iloc[0]
-    assert row.GVI == 0.4 and row.nr_of_points == 1  # null GVI excluded from both
+    # the reference's per-image tables carry their own id column
+    with_id = gvi_pts.withColumn("id", F.lit(7).cast("long")).select("id", "x", "y", "GVI")
+    for images in (gvi_pts, with_id):
+        sv = api.get_streetview_GVI(pois, images, buffer_dist=150).toPandas()
+        row = sv[sv.url == "a"].iloc[0]
+        assert row.GVI == 0.4 and row.nr_of_points == 1  # null GVI excluded from both
 
 
 def test_street_edges_as_pois(spark):

@@ -422,12 +422,15 @@ def test_isochrone_hole_fill(spark):
     """radius 500 on the 200 m lattice induces edge loops; the capsule
     union has (200-50)² holes that Polygon(exterior) semantics fill —
     pixels at grid-square centers are ~>25 m from any segment but must
-    be inside the AoI (availability.py:1060-1062)."""
+    be inside the AoI (availability.py:1060-1062).  The same AoI
+    through zonal_stats_aoi counts the hole pixels too."""
     from greenex_py_spark.data import city_fixture as fx
     from greenex_py_spark.data import driver_city as city
+    from greenex_py_spark.geo.grid import GridSpec
     from greenex_py_spark.operators.network import (
-        isochrone_edges, isochrone_raster_mask,
+        _capsule_union, isochrone_edges, isochrone_raster_mask,
     )
+    from greenex_py_spark.operators.zonal import aoi_isochrone, zonal_stats_aoi
 
     # PoI exactly on lattice node (25, 25)
     px = city.X0 + 25 * fx.GRID_STEP
@@ -436,10 +439,12 @@ def test_isochrone_hole_fill(spark):
     nodes, edges = fx.network_dfs(spark)
     segs = isochrone_edges(pts, nodes, edges, radius=500.0).toPandas()
     assert len(segs) >= 8  # loops exist
+    seg_xy = [segs[c].to_numpy(float) for c in ("ax", "ay", "bx", "by")]
     filled, (ix0, iy0) = isochrone_raster_mask(segs, 5.0, city.X0, city.Y0, 2000, 25.0)
-    open_, _ = isochrone_raster_mask(
-        segs, 5.0, city.X0, city.Y0, 2000, 25.0, fill_holes=False
-    )
+    h, w = filled.shape
+    X, Y = np.meshgrid(city.X0 + (np.arange(ix0, ix0 + w) + 0.5) * 5.0,
+                       city.Y0 + (np.arange(iy0, iy0 + h) + 0.5) * 5.0)
+    open_ = _capsule_union(X, Y, *seg_xy, 25.0)
     # grid-square center (100,100) m off the node = hole interior
     hx, hy = px + 100.0, py + 100.0
     jx = int((hx - city.X0) // 5.0) - ix0
@@ -447,6 +452,27 @@ def test_isochrone_hole_fill(spark):
     assert not open_[jy, jx]      # not in any capsule
     assert filled[jy, jx]         # but inside the filled polygon
     assert filled.sum() > open_.sum()
+
+    # raster coding capsule pixels 1 and all others 2: class 2's share
+    # of the iso AoI is exactly the hole share of the filled mask
+    grid = GridSpec.square(city.X0, city.Y0, 5.0, 100, 2000)
+    rows = []
+    for ty in range(int((py - 700 - city.Y0) // 500), int((py + 700 - city.Y0) // 500) + 1):
+        for tx in range(int((px - 700 - city.X0) // 500), int((px + 700 - city.X0) // 500) + 1):
+            X, Y = np.meshgrid(city.X0 + (tx * 100 + np.arange(100) + 0.5) * 5.0,
+                               city.Y0 + (ty * 100 + np.arange(100) + 0.5) * 5.0)
+            v = np.where(_capsule_union(X, Y, *seg_xy, 25.0), 1.0, 2.0)
+            rows.append((tx, ty, city.X0 + tx * 500.0, city.Y0 + ty * 500.0, 5.0,
+                         100, 100, v.ravel().tolist()))
+    tiles = spark.createDataFrame(
+        rows, "tx int, ty int, x0 double, y0 double, res double, w int, h int, px array<double>"
+    )
+    aoi = aoi_isochrone(pts, nodes, edges, 500.0)
+    out = zonal_stats_aoi(aoi, tiles, stat="classes", class_values=[1, 2], grid=grid).toPandas()
+    holes = int(filled.sum() - open_.sum())
+    assert float(out.class_2.iloc[0].rstrip("%")) == pytest.approx(
+        holes / filled.sum() * 100.0, abs=1e-3
+    )
 
 
 def test_streetview_sampler_step_scheme(spark):

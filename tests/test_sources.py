@@ -162,7 +162,8 @@ def _write_gpkg(path, pdf, table="parks", srs_id=28992, geom="geom"):
             "CREATE TABLE gpkg_geometry_columns "
             "(table_name TEXT, column_name TEXT, srs_id INTEGER)"
         )
-        con.execute(f"CREATE TABLE {table} (gs_id INTEGER, tag TEXT, {geom} BLOB)")
+        ident = '"' + table.replace('"', '""') + '"'
+        con.execute(f"CREATE TABLE {ident} (gs_id INTEGER, tag TEXT, {geom} BLOB)")
         con.execute("INSERT INTO gpkg_contents VALUES (?, 'features')", (table,))
         con.execute(
             "INSERT INTO gpkg_geometry_columns VALUES (?, ?, ?)",
@@ -175,7 +176,7 @@ def _write_gpkg(path, pdf, table="parks", srs_id=28992, geom="geom"):
                 envelope=(r.minx, r.maxx, r.miny, r.maxy),
             )
             con.execute(
-                f"INSERT INTO {table} VALUES (?, ?, ?)", (r.gs_id, r.tag, blob)
+                f"INSERT INTO {ident} VALUES (?, ?, ?)", (r.gs_id, r.tag, blob)
             )
 
 
@@ -233,6 +234,38 @@ def test_gpkg_file_roundtrip(spark, tmp_path):
     assert len(read_gpkg_pdf(path, max_rows=20)) == 20
     with pytest.raises(ValueError, match="parquet"):
         read_gpkg_pdf(path, max_rows=19)
+
+
+def test_gpkg_table_name_with_quote(tmp_path):
+    """A layer name containing '"' reads like any other."""
+    from greenex_py_spark.data import city_fixture as fx
+    from greenex_py_spark.sources.gpkg import read_gpkg_pdf
+
+    pdf = fx.greenspace_rings_pdf().head(3)
+    path = str(tmp_path / "quoted.gpkg")
+    _write_gpkg(path, pdf, table='parks "north"')
+    assert list(read_gpkg_pdf(path).gs_id) == list(pdf.gs_id)
+    assert len(read_gpkg_pdf(path, table='parks "north"')) == 3
+
+
+def test_gpkg_empty_geometry_rows_dropped(tmp_path):
+    """Empty-geometry rows are dropped like NULL geometries instead of
+    aborting the read."""
+    import sqlite3
+    import struct
+
+    from greenex_py_spark.data import city_fixture as fx
+    from greenex_py_spark.sources.gpkg import read_gpkg_pdf
+
+    pdf = fx.greenspace_rings_pdf().head(3)
+    path = str(tmp_path / "empties.gpkg")
+    _write_gpkg(path, pdf)
+    empty = b"GP" + bytes([0, 0b10001]) + struct.pack("<i", 28992)
+    with sqlite3.connect(path) as con:
+        con.execute("INSERT INTO parks VALUES (?, ?, ?)", (-1, "empty", empty))
+        con.execute("INSERT INTO parks VALUES (?, ?, ?)", (-2, "null", None))
+    got = read_gpkg_pdf(path)
+    assert list(got.gs_id) == list(pdf.gs_id)
 
 
 def test_parse_epsg_strings():
