@@ -2,7 +2,8 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
 Headline queries over $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS].  The flagship metric is the north-star one:
+on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run
+on).  The flagship metric is the north-star one:
 spatial-join + tile-assignment throughput (rows/sec) over a synthetic
 Common-Crawl-style documents table (url-hash geocode → cell assignment →
 cell-prefiltered point-in-polygon join), measured end-to-end with a noop
@@ -27,7 +28,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "1000000"))
 
 

@@ -174,26 +174,3 @@ class Pipeline:
         m.stages = list(self.stats)
         return m.dump()
 
-
-def localcheckpoint_fresh(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` that also RESETS plan statistics.
-
-    Spark 4.x's ``LogicalRDD`` inherits the pre-checkpoint plan's
-    ``sizeInBytes``, so an iterative operator whose round plan joins
-    the running frame against itself k times compounds the estimate
-    ~k× per round — after ~8 rounds the stat is a multi-megabit
-    BigInteger and Catalyst's size estimation ooms the DRIVER heap
-    (observed in the synchronous-Louvain loop: 63 → 568 → 2 582 →
-    10 639 bits per round through plain localCheckpoint).  Rebuilding
-    the DataFrame from the checkpointed RDD JVM-side (public
-    ``createDataFrame(JavaRDD[Row], schema)`` — rows never cross into
-    Python) yields a fresh LogicalRDD with default stats.  Use this
-    instead of ``localCheckpoint`` whenever the checkpointed frame
-    feeds the NEXT iteration of a multi-join round; plain
-    localCheckpoint remains right for one-shot reuse frames."""
-    cp = df.localCheckpoint()
-    jdf = cp._jdf
-    return DataFrame(
-        jdf.sparkSession().createDataFrame(jdf.toJavaRDD(), jdf.schema()),
-        cp.sparkSession,
-    )

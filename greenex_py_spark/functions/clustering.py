@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
+
 
 def _sqdist(vcol, ccol):
     return F.round(
@@ -173,7 +175,8 @@ def _lloyd_centroids(v: DataFrame, k: int, iters: int, id_col: str) -> DataFrame
         F.col(id_col).alias("cid"), F.col("v").alias("cv")
     )
     w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(), F.col("cid").asc())
-    for _ in range(iters):
+
+    def step(cents: DataFrame, _: int) -> DataFrame:
         asg = (
             v.crossJoin(F.broadcast(cents))
             .withColumn("_d", _sqdist(F.col("v"), F.col("cv")))
@@ -193,12 +196,11 @@ def _lloyd_centroids(v: DataFrame, k: int, iters: int, id_col: str) -> DataFrame
                 ).alias("cv_new")
             )
         )
-        cents = (
-            cents.join(upd, "cid", "left")
-            .select("cid", F.coalesce(F.col("cv_new"), F.col("cv")).alias("cv"))
-            .localCheckpoint()  # lineage cap per round (CLAUDE.md)
+        return cents.join(upd, "cid", "left").select(
+            "cid", F.coalesce(F.col("cv_new"), F.col("cv")).alias("cv")
         )
-    return cents
+
+    return fixpoint(cents, step, iters)
 
 
 def silhouette_oracle_sql(
@@ -275,7 +277,8 @@ def em_poisson2(
         "l1q long, l2q long, p2q long",
     )
     x = F.col(x_col).cast("long")
-    for _ in range(iters):
+
+    def step(params: DataFrame, _: int) -> DataFrame:
         lam1 = F.col("l1q").cast("double") / EM_L_Q
         lam2 = F.col("l2q").cast("double") / EM_L_Q
         pi2 = F.col("p2q").cast("double") / EM_R_Q
@@ -297,7 +300,7 @@ def em_poisson2(
             F.sum((F.lit(EM_R_Q) - F.col("rq")) * F.col("x"))
             .cast("long").alias("sx1q"),
         )
-        params = agg.select(
+        return agg.select(
             F.floor(
                 F.col("sx1q").cast("double")
                 / (F.col("n").cast("double") * EM_R_Q - F.col("n2q").cast("double"))
@@ -312,7 +315,9 @@ def em_poisson2(
                 / (F.col("n").cast("double") * EM_R_Q)
                 * EM_R_Q + F.lit(0.5)
             ).cast("long").alias("p2q"),
-        ).localCheckpoint()
+        )
+
+    params = fixpoint(params, step, iters)
     lam1 = F.col("l1q").cast("double") / EM_L_Q
     lam2 = F.col("l2q").cast("double") / EM_L_Q
     pi2 = F.col("p2q").cast("double") / EM_R_Q
@@ -504,7 +509,6 @@ def als_factorize(
         )
         .localCheckpoint()
     )
-    userf = None
 
     def solve(joined: DataFrame, key: str, f1: str, f2: str) -> DataFrame:
         """closed-form ridge solve per `key` given factor cols f1/f2
@@ -531,19 +535,20 @@ def als_factorize(
             F.floor(w2 * ALS_Q + F.lit(0.5)).cast("long").alias("w2q"),
         )
 
-    for _ in range(iters):
-        ju = r.join(F.broadcast(itemf), "i")
+    def alternate(state: tuple, _: int) -> tuple:
+        ju = r.join(F.broadcast(state[1]), "i")
         userf = (
             solve(ju, "u", "x1q", "x2q")
             .withColumnsRenamed({"w1q": "y1q", "w2q": "y2q"})
-            .localCheckpoint()
+            .localCheckpoint()  # read by this round's item solve and returned
         )
         ji = r.join(userf, "u")
-        itemf = (
-            solve(ji, "i", "y1q", "y2q")
-            .withColumnsRenamed({"w1q": "x1q", "w2q": "x2q"})
-            .localCheckpoint()
+        itemf = solve(ji, "i", "y1q", "y2q").withColumnsRenamed(
+            {"w1q": "x1q", "w2q": "x2q"}
         )
+        return userf, itemf
+
+    userf, itemf = fixpoint((None, itemf), alternate, iters)
 
     # integer SSE: prediction floored to cents per row, residual squared
     pred = (

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
+
 P_MOD = 1_000_000_007
 SID_MOD = 1 << 28  # shingle ids < 2^28 keep a*sid + b inside int64
 
@@ -1306,7 +1308,8 @@ def fellegi_sunter_em(
         return F.lit(1.0) / (F.lit(1.0) + F.exp(-s))
 
     clamp = lambda c: F.greatest(F.lit(1), F.least(F.lit(FS_Q - 1), c))  # noqa: E731
-    for _ in range(iters):
+
+    def step(params: DataFrame, _: int) -> DataFrame:
         e = pairs.crossJoin(F.broadcast(params)).select(
             *[F.col(c).cast("long").alias(c) for c in gamma_cols],
             F.floor(posterior() * F.lit(float(FS_Q)) + F.lit(0.5))
@@ -1351,7 +1354,9 @@ def fellegi_sunter_em(
                 ).cast("long")
             ).cast("long").alias("pq")
         )
-        params = a.select(*news).localCheckpoint()
+        return a.select(*news)
+
+    params = fixpoint(params, step, iters)
 
     hard = pairs.crossJoin(F.broadcast(params)).select(
         F.floor(posterior() * F.lit(float(FS_Q)) + F.lit(0.5))

@@ -25,7 +25,60 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint, localcheckpoint_fresh
+
 PICO = 1_000_000_000_000.0
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """[a, b] — the distinct undirected simple edges (a < b, no loops)."""
+    return (
+        edges.select(
+            F.least(src_col, dst_col).alias("a"),
+            F.greatest(src_col, dst_col).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _rank_rounds(
+    ranks: DataFrame,
+    nodes: DataFrame,
+    eo: DataFrame,
+    out: DataFrame,
+    share,
+    rank,
+    n_iters: int,
+    keep: tuple = ("node",),
+) -> DataFrame:
+    """``n_iters`` quantized rounds of the PageRank family: every edge
+    of ``eo`` carries ``share`` of its source's rank ``r`` (rounded to
+    pico-ints), the rank of nodes absent from ``out`` (dangling) sums
+    into one broadcast pico-int scalar ``dgp``, and ``rank`` — over the
+    summed inflow ``s`` and ``dgp`` — is each node's next ``r``,
+    re-rounded to 9 dp."""
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contrib = eo.join(ranks, eo["src"] == ranks["node"]).select(
+            "dst", F.round(share * PICO).cast("long").alias("c")
+        )
+        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        dang = (
+            ranks.join(out, ranks["node"] == out["src"], "left_anti")
+            .agg(
+                F.coalesce(
+                    F.sum(F.round(F.col("r") * PICO).cast("long")), F.lit(0)
+                ).alias("dgp")
+            )
+        )
+        return (
+            nodes.join(summed, nodes["node"] == summed["dst"], "left")
+            .crossJoin(F.broadcast(dang))
+            .select(*keep, F.round(rank, 9).alias("r"))
+        )
+
+    return fixpoint(ranks, step, n_iters)
 
 
 def pagerank(
@@ -55,37 +108,13 @@ def pagerank(
     eo = e.join(od, "src").localCheckpoint()  # edges + outdeg, reused every round
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("r"))
     base = (1.0 - damping) / n
-    for _ in range(n_iters):
-        contrib = (
-            eo.join(ranks, eo["src"] == ranks["node"])
-            .select(
-                "dst",
-                F.round(F.col("r") / F.col("od") * PICO).cast("long").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        dang = (
-            ranks.join(od, ranks["node"] == od["src"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("r") * PICO).cast("long")), F.lit(0)
-                ).alias("dgp")
-            )
-        )
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.round(
-                    base
-                    + damping * (F.coalesce("s", F.lit(0)) / PICO)
-                    + damping * (F.col("dgp") / PICO) / n,
-                    9,
-                ).alias("r"),
-            )
-            .localCheckpoint()
-        )
+    ranks = _rank_rounds(
+        ranks, nodes, eo, od, F.col("r") / F.col("od"),
+        base
+        + damping * (F.coalesce("s", F.lit(0)) / PICO)
+        + damping * (F.col("dgp") / PICO) / n,
+        n_iters,
+    )
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -208,14 +237,7 @@ def degree_assortativity(
     cancellation).  Shape: two degree joins on the endpoint keys
     (co-partitioned with the degree aggregate), one 1-row reduction.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -266,14 +288,7 @@ def triangle_stats(
     bound).  Wedges = Σ d(d−1)/2 over undirected degrees.  All
     integers; one round-6 division.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -352,14 +367,7 @@ def local_clustering(
     factor, no extra shuffle shape), and a groupBy counts incidences
     per vertex.  All integers; one final division, round-6.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -448,14 +456,7 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     bo = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -464,7 +465,8 @@ def label_propagation(
     )
     labels = sd.localCheckpoint()
     w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("label").asc())
-    for _ in range(rounds):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             bo.join(labels, bo["b"] == labels["node"])
             .groupBy("a", "label")
@@ -475,10 +477,9 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select(F.col("a").alias("node"), "label")
         )
-        labels = (
-            sd.unionByName(new.join(sd.select("node"), "node", "left_anti"))
-            .localCheckpoint()
-        )
+        return sd.unionByName(new.join(sd.select("node"), "node", "left_anti"))
+
+    labels = fixpoint(labels, step, rounds)
     return labels.select(F.col("node").alias(node_col), F.col("label").alias(label_col))
 
 
@@ -508,50 +509,36 @@ def hits(
     )
     n = nodes.count()
     h = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("h"))
-    a = None
-    for _ in range(n_iters):
-        hq = F.round(F.col("h") * PICO).cast("long")
-        araw = (
-            e.join(h, e["src"] == h["node"])
-            .select("dst", hq.alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("ar"))
+
+    def spread(score: DataFrame, frm: str, to: str, name: str) -> DataFrame:
+        """[node, name] — the L1-normalized pico-int mass each node
+        receives from ``score`` along the edges frm → to."""
+        raw = (
+            e.join(score, e[frm] == score["node"])
+            .select(to, F.round(F.col(score.columns[1]) * PICO).cast("long").alias("c"))
+            .groupBy(to)
+            .agg(F.sum("c").alias("raw"))
         )
-        sa = araw.agg(F.sum("ar").alias("sa"))
-        a = (
-            nodes.join(araw, nodes["node"] == araw["dst"], "left")
-            .crossJoin(F.broadcast(sa))
+        tot = raw.agg(F.sum("raw").alias("tot"))
+        return (
+            nodes.join(raw, nodes["node"] == raw[to], "left")
+            .crossJoin(F.broadcast(tot))
             .select(
                 "node",
                 F.round(
-                    F.coalesce(F.col("ar"), F.lit(0)).cast("double")
-                    / F.col("sa").cast("double"),
+                    F.coalesce(F.col("raw"), F.lit(0)).cast("double")
+                    / F.col("tot").cast("double"),
                     9,
-                ).alias("a"),
+                ).alias(name),
             )
-            .localCheckpoint()
         )
-        aq = F.round(F.col("a") * PICO).cast("long")
-        hraw = (
-            e.join(a, e["dst"] == a["node"])
-            .select("src", aq.alias("c"))
-            .groupBy("src")
-            .agg(F.sum("c").alias("hr"))
-        )
-        sh = hraw.agg(F.sum("hr").alias("sh"))
-        h = (
-            nodes.join(hraw, nodes["node"] == hraw["src"], "left")
-            .crossJoin(F.broadcast(sh))
-            .select(
-                "node",
-                F.round(
-                    F.coalesce(F.col("hr"), F.lit(0)).cast("double")
-                    / F.col("sh").cast("double"),
-                    9,
-                ).alias("h"),
-            )
-            .localCheckpoint()
-        )
+
+    def step(state: tuple, _: int) -> tuple:
+        # authorities are read by this round's hubs and returned
+        a = spread(state[0], "src", "dst", "a").localCheckpoint()
+        return spread(a, "dst", "src", "h"), a
+
+    h, a = fixpoint((h, None), step, n_iters)
     return (
         h.join(a, "node")
         .select("node", F.col("h").alias("hub"), F.col("a").alias("authority"))
@@ -576,40 +563,35 @@ def kcore_membership(
     two-phase count — no second membership join — and lets the DuckDB
     oracle run the same step under recursive-CTE working-table
     semantics.  Rounds = peeling depth (all sub-k vertices drop
-    simultaneously), far below the vertex-count worst case;
-    ``localCheckpoint`` per round caps plan lineage (CLAUDE.md).
+    simultaneously), far below the vertex-count worst case; the rounds
+    run under ``engine/iterate.fixpoint``, which checkpoints each alive
+    set with reset statistics, and each set is counted once.
 
     Scale: every round shuffles by vertex id only; degree counting is
     map-side combinable.  State = the alive vertex set, shrinking
     monotonically.
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
     alive = both.select(F.col("a").alias("node")).distinct().localCheckpoint()
-    n = alive.count()
-    for _ in range(max_rounds):
-        nxt = (
+    sizes = [alive.count()]  # each round's size counted once, carried
+
+    def peel(alive: DataFrame, _: int) -> DataFrame:
+        return (
             both.join(alive, both["b"] == alive["node"])
             .groupBy("a")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("a").alias("node"))
-            .localCheckpoint()
         )
-        m = nxt.count()
-        alive = nxt
-        if m == n:
-            break
-        n = m
+
+    def stable(_: DataFrame, nxt: DataFrame) -> bool:
+        sizes.append(nxt.count())
+        return sizes[-1] == sizes[-2]
+
+    alive = fixpoint(alive, peel, max_rounds, stable)
     core1 = alive.select(F.col("node").alias("a"))
     core2 = alive.select(F.col("node").alias("b"))
     return (
@@ -647,14 +629,7 @@ def adamic_adar(
     sits ~1e-13 — far inside the round-6 contract (the
     q_markov_entropy ln() convention).
     """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -738,37 +713,15 @@ def trustrank(
         .alias("r"),
     )
     base = (1.0 - damping) / ns
-    for _ in range(n_iters):
-        contrib = eo.join(ranks, eo["src"] == ranks["node"]).select(
-            "dst",
-            F.round(F.col("r") / F.col("od") * PICO).cast("long").alias("c"),
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        dang = (
-            ranks.join(od, ranks["node"] == od["src"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("r") * PICO).cast("long")), F.lit(0)
-                ).alias("dgp")
-            )
-        )
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node", "is_seed",
-                F.round(
-                    F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(0.0)
-                    + damping * (F.coalesce("s", F.lit(0)) / PICO)
-                    + F.when(
-                        F.col("is_seed") == 1,
-                        damping * (F.col("dgp") / PICO) / ns,
-                    ).otherwise(0.0),
-                    9,
-                ).alias("r"),
-            )
-            .localCheckpoint()
-        )
+    seed = F.col("is_seed") == 1
+    ranks = _rank_rounds(
+        ranks, nodes, eo, od, F.col("r") / F.col("od"),
+        F.when(seed, F.lit(base)).otherwise(0.0)
+        + damping * (F.coalesce("s", F.lit(0)) / PICO)
+        + F.when(seed, damping * (F.col("dgp") / PICO) / ns).otherwise(0.0),
+        n_iters,
+        keep=("node", "is_seed"),
+    )
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -954,16 +907,8 @@ def ktruss_edges(
     ``localCheckpoint`` per round caps plan lineage (CLAUDE.md).
     """
     t = k - 2
-    alive = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = alive.count()
+    alive = _undirected(edges, src_col, dst_col).localCheckpoint()
+    sizes = [alive.count()]  # each round's size counted once, carried
 
     def supports(und: DataFrame) -> DataFrame:
         """[a, b, support] — per-edge triangle count, each triangle
@@ -1032,19 +977,14 @@ def ktruss_edges(
             F.count(F.lit(1)).cast("long").alias("support")
         )
 
-    for _ in range(max_rounds):
-        nxt = (
-            supports(alive)
-            .filter(F.col("support") >= t)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-        m = nxt.count()
-        if m == n:
-            break
-        alive, n = nxt, m
-        if m == 0:
-            break
+    def peel(alive: DataFrame, _: int) -> DataFrame:
+        return supports(alive).filter(F.col("support") >= t).select("a", "b")
+
+    def stable(_: DataFrame, nxt: DataFrame) -> bool:
+        sizes.append(nxt.count())
+        return sizes[-1] in (sizes[-2], 0)
+
+    alive = fixpoint(alive, peel, max_rounds, stable)
     return supports(alive).filter(F.col("support") >= t)
 
 
@@ -1109,23 +1049,17 @@ def harmonic_centrality(
     contract.  Each 1/d term is the same IEEE double in both engines,
     1e-9-quantized before the per-node integer sum (the
     outlink-entropy convention)."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     d = (
         und.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .withColumn("d", F.lit(1).cast("long"))
         .localCheckpoint()
     )
-    n = d.count()
-    s = d.agg(F.sum("d")).collect()[0][0]
-    for _ in range(max_rounds):
+    # (pairs, Σd) of each round, computed once and carried
+    sig = [(d.count(), d.agg(F.sum("d")).collect()[0][0])]
+
+    def square(d: DataFrame, _: int) -> DataFrame:
         l = d.select(F.col("u"), F.col("v").alias("m"), F.col("d").alias("d1"))
         r = d.select(F.col("u").alias("m"), F.col("v"), F.col("d").alias("d2"))
         ext = (
@@ -1133,18 +1067,13 @@ def harmonic_centrality(
             .filter(F.col("u") != F.col("v"))
             .select("u", "v", (F.col("d1") + F.col("d2")).alias("d"))
         )
-        nd = (
-            d.unionByName(ext)
-            .groupBy("u", "v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
-        n2 = nd.count()
-        s2 = nd.agg(F.sum("d")).collect()[0][0]
-        d = nd
-        if n2 == n and s2 == s:
-            break
-        n, s = n2, s2
+        return d.unionByName(ext).groupBy("u", "v").agg(F.min("d").alias("d"))
+
+    def stable(_: DataFrame, nd: DataFrame) -> bool:
+        sig.append((nd.count(), nd.agg(F.sum("d")).collect()[0][0]))
+        return sig[-1] == sig[-2]
+
+    d = fixpoint(d, square, max_rounds, stable)
     return d.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reachable"),
         F.round(
@@ -1191,6 +1120,13 @@ SELECT u AS node, CAST(count(*) AS BIGINT) AS n_reachable,
              / 1000000000.0 + 0.0, 6) AS harmonic
 FROM d{rounds} GROUP BY u"""
     )
+
+
+def _closure_square(r: DataFrame, _: int) -> DataFrame:
+    """One transitive-closure squaring round R ← distinct(R ∪ R∘R)."""
+    l = r.select(F.col("u"), F.col("v").alias("m"))
+    rt = r.select(F.col("u").alias("m"), F.col("v"))
+    return r.unionByName(l.join(rt, "m").select("u", "v")).distinct()
 
 
 def scc_components(
@@ -1240,14 +1176,7 @@ def scc_components(
     # ≤ |V| − 1, so ⌈log₂|V|⌉ rounds suffice — no per-round count jobs
     n_nodes = nodes.count()
     rounds = min(max_rounds, max(1, math.ceil(math.log2(max(2, n_nodes)))))
-    for _ in range(rounds):
-        l = r.select(F.col("u"), F.col("v").alias("m"))
-        rt = r.select(F.col("u").alias("m"), F.col("v"))
-        r = (
-            r.unionByName(l.join(rt, "m").select("u", "v"))
-            .distinct()
-            .localCheckpoint()
-        )
+    r = fixpoint(r, _closure_square, rounds)
     mutual = r.join(
         r.select(F.col("v").alias("u"), F.col("u").alias("v")),
         ["u", "v"],
@@ -1309,7 +1238,9 @@ def boruvka_mst(
     )
     mst = spark.createDataFrame([], "u long, v long, w4 long")
     key = F.struct(F.col("w4"), F.col("u"), F.col("v"))
-    for _ in range(max_rounds):
+
+    def merge(state: tuple, _: int) -> tuple:
+        comp, mst = state
         ec = (
             e.join(comp.select(F.col("n").alias("u"),
                                F.col("comp").alias("cu")), "u")
@@ -1326,24 +1257,106 @@ def boruvka_mst(
         ).select("e.u", "e.v", "e.w4", "e.cu", "e.cv")
         chosen = sel.dropDuplicates(["u", "v"]).localCheckpoint()
         if chosen.isEmpty():
-            break
-        mst = mst.unionByName(
-            chosen.select("u", "v", "w4")
-        ).localCheckpoint()
+            return state
         cnodes = comp.select(F.col("comp").alias("gs_id")).distinct()
         cedges = chosen.select(F.col("cu").alias("a"),
                                F.col("cv").alias("b"))
         cc = connected_components(cnodes, cedges, key="gs_id")
-        comp = (
-            comp.join(
-                cc.select(F.col("gs_id").alias("comp"),
-                          F.col("comp").alias("newc")),
-                "comp",
-            )
-            .select("n", F.col("newc").alias("comp"))
-            .localCheckpoint()
+        comp = comp.join(
+            cc.select(F.col("gs_id").alias("comp"),
+                      F.col("comp").alias("newc")),
+            "comp",
+        ).select("n", F.col("newc").alias("comp"))
+        return comp, mst.unionByName(chosen.select("u", "v", "w4"))
+
+    return fixpoint((comp, mst), merge, max_rounds)[1]
+
+
+def _brandes(
+    und: DataFrame, max_depth: int, last: int, terms: list | None = None
+) -> tuple:
+    """The all-sources Brandes sweep over the undirected pairs
+    ``und (a, b)`` shared by :func:`betweenness_centrality` and
+    :func:`edge_betweenness`; returns (nodes [u], the dependency frame
+    [s, v, sigma, dq] of every folded level).
+
+    Forward: BFS levels [s, v, sigma] from (s, s, 1) until a level
+    comes out empty; the visited set trails one level behind the
+    frontier, so each round builds it from checkpointed frames only.
+    Backward: the dependency fold from the deepest level down to level
+    ``last``, each term (σ_v/σ_w)·(1 + δ_w) on one fixed IEEE chain and
+    1e-9-quantized BEFORE its sum.  With ``terms`` given, every round's
+    checkpointed term frame [s, v, vw, tq] is appended to it."""
+    adj = (
+        und.select(F.col("a").alias("u"), F.col("b").alias("w"))
+        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("w")))
+        .localCheckpoint()
+    )
+    nodes = adj.select("u").distinct().localCheckpoint()
+    lv0 = nodes.select(
+        F.col("u").alias("s"), F.col("u").alias("v"),
+        F.lit(1).cast("long").alias("sigma"),
+    ).localCheckpoint()
+    levels = [lv0]
+
+    def expand(state: tuple, _: int) -> tuple:
+        cur, seen = state  # seen: every level before cur
+        seen = cur.select("s", "v") if seen is None else seen.unionByName(
+            cur.select("s", "v")
         )
-    return mst
+        cand = cur.join(adj, cur["v"] == adj["u"]).select(
+            "s", F.col("w").alias("v"), "sigma"
+        )
+        nxt = (
+            cand.join(seen, ["s", "v"], "left_anti")
+            .groupBy("s", "v")
+            .agg(F.sum("sigma").cast("long").alias("sigma"))
+        )
+        return nxt, seen
+
+    def record(_: tuple, state: tuple) -> bool:
+        if state[0].isEmpty():
+            return True
+        levels.append(state[0])
+        return False
+
+    fixpoint((lv0, None), expand, max_depth, record)
+
+    def fold(delta: DataFrame, r: int) -> DataFrame:
+        p = levels[len(levels) - 2 - r]
+        succ = (
+            p.join(adj, p["v"] == adj["u"])
+            .select("s", "v", "sigma", F.col("w").alias("vw"))
+            .join(
+                delta.select(
+                    F.col("s").alias("s2"), F.col("v").alias("vw2"),
+                    F.col("sigma").alias("sw"), F.col("dq").alias("dqw"),
+                ),
+                (F.col("s") == F.col("s2")) & (F.col("vw") == F.col("vw2")),
+            )
+        )
+        ratio = F.col("sigma").cast("double") / F.col("sw").cast("double")
+        fac = F.lit(1.0) + F.col("dqw").cast("double") / 1000000000.0
+        term = F.floor(ratio * fac * 1000000000.0 + F.lit(0.5)).cast("long")
+        tq = succ.select("s", "v", "vw", term.alias("tq"))
+        if terms is not None:
+            tq = tq.localCheckpoint()  # read by contrib and by the caller
+            terms.append(tq)
+        contrib = tq.groupBy("s", "v").agg(F.sum("tq").cast("long").alias("dq"))
+        return p.join(contrib, ["s", "v"], "left").select(
+            "s", "v", "sigma",
+            F.coalesce("dq", F.lit(0)).cast("long").alias("dq"),
+        )
+
+    deltas = [
+        levels[-1].select(
+            "s", "v", "sigma", F.lit(0).cast("long").alias("dq")
+        ).localCheckpoint()
+    ]
+    fixpoint(
+        deltas[0], fold, len(levels) - 1 - last, lambda _, d: deltas.append(d)
+    )
+    return nodes, deltas
 
 
 def betweenness_centrality(
@@ -1373,77 +1386,11 @@ def betweenness_centrality(
     1e-9-quantized to int64 BEFORE the per-node sum (summation-order
     free), so the oracle's unrolled CTE chain reproduces every round
     bit-for-bit."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("w"))
-        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("w")))
-        .localCheckpoint()
-    )
-    nodes = adj.select("u").distinct().localCheckpoint()
-    lv0 = nodes.select(
-        F.col("u").alias("s"), F.col("u").alias("v"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint()
-    levels = [lv0]
-    vis = lv0.select("s", "v").localCheckpoint()
-    cur = lv0
-    for _ in range(max_depth):
-        cand = cur.join(adj, cur["v"] == adj["u"]).select(
-            "s", F.col("w").alias("v"), "sigma"
-        )
-        nxt = (
-            cand.join(vis, ["s", "v"], "left_anti")
-            .groupBy("s", "v")
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        vis = vis.unionByName(nxt.select("s", "v")).localCheckpoint()
-        cur = nxt
-    spark = edges.sparkSession
-    delta = levels[-1].select(
-        "s", "v", "sigma", F.lit(0).cast("long").alias("dq")
-    ).localCheckpoint()
-    all_dq = [delta.select("v", "dq")]
-    for L in range(len(levels) - 2, 0, -1):
-        p = levels[L]
-        succ = (
-            p.join(adj, p["v"] == adj["u"])
-            .select("s", "v", "sigma", F.col("w").alias("vw"))
-            .join(
-                delta.select(
-                    F.col("s").alias("s2"), F.col("v").alias("vw2"),
-                    F.col("sigma").alias("sw"), F.col("dq").alias("dqw"),
-                ),
-                (F.col("s") == F.col("s2")) & (F.col("vw") == F.col("vw2")),
-            )
-        )
-        # fixed IEEE chain, quantized per term BEFORE the sum
-        ratio = F.col("sigma").cast("double") / F.col("sw").cast("double")
-        fac = F.lit(1.0) + F.col("dqw").cast("double") / 1000000000.0
-        term = F.floor(ratio * fac * 1000000000.0 + F.lit(0.5)).cast("long")
-        contrib = succ.groupBy("s", "v").agg(F.sum(term).alias("dq"))
-        delta = (
-            p.join(contrib, ["s", "v"], "left")
-            .select(
-                "s", "v", "sigma",
-                F.coalesce("dq", F.lit(0)).cast("long").alias("dq"),
-            )
-            .localCheckpoint()
-        )
-        all_dq.append(delta.select("v", "dq"))
-    acc = all_dq[0]
-    for d in all_dq[1:]:
-        acc = acc.unionByName(d)
+    und = _undirected(edges, src_col, dst_col)
+    nodes, deltas = _brandes(und, max_depth, 1)
+    acc = deltas[0].select("v", "dq")
+    for d in deltas[1:]:
+        acc = acc.unionByName(d.select("v", "dq"))
     agg = acc.groupBy("v").agg(F.sum("dq").cast("long").alias("tq"))
     return nodes.join(agg, nodes["u"] == agg["v"], "left").select(
         F.col("u").alias("node"),
@@ -1528,15 +1475,8 @@ def rich_club(
     (nodes) and the min-endpoint-degree histogram (edges) — never a
     per-k subgraph scan; one double division per row.  Rows with
     N_{>k} < 2 are dropped (undefined density)."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # consumed by degrees AND the edge re-join
-    )
+    # consumed by degrees AND the edge re-join
+    und = _undirected(edges, src_col, dst_col).localCheckpoint()
     deg = (
         und.select(F.col("a").alias("n"))
         .unionByName(und.select(F.col("b").alias("n")))
@@ -1587,14 +1527,7 @@ def powerlaw_alpha(
     the rich-club curve.  Each ln(d) is 1e-9-quantized to int64 on the
     shared libm expression before the sum (order-free); a degenerate
     all-degree-1 graph → NULL."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     deg = (
         und.select(F.col("a").alias("n"))
         .unionByName(und.select(F.col("b").alias("n")))
@@ -1638,84 +1571,16 @@ def edge_betweenness(
     every term 1e-9-quantized on one fixed IEEE chain BEFORE its sum
     (order-free), level-synchronous BFS state ≤ |V|² (dim-sized host
     graph), localCheckpoint per round."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
+    # consumed by adj AND the final edge join
+    und = _undirected(edges, src_col, dst_col).localCheckpoint()
+    terms = []
+    _brandes(und, max_depth, 0, terms)
+    edge_parts = [
+        t.select(
+            F.least("v", "vw").alias("a"), F.greatest("v", "vw").alias("b"), "tq"
         )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # consumed by adj AND the final edge join
-    )
-    adj = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("w"))
-        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("w")))
-        .localCheckpoint()
-    )
-    nodes = adj.select("u").distinct().localCheckpoint()
-    lv0 = nodes.select(
-        F.col("u").alias("s"), F.col("u").alias("v"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint()
-    levels = [lv0]
-    vis = lv0.select("s", "v").localCheckpoint()
-    cur = lv0
-    for _ in range(max_depth):
-        cand = cur.join(adj, cur["v"] == adj["u"]).select(
-            "s", F.col("w").alias("v"), "sigma"
-        )
-        nxt = (
-            cand.join(vis, ["s", "v"], "left_anti")
-            .groupBy("s", "v")
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        vis = vis.unionByName(nxt.select("s", "v")).localCheckpoint()
-        cur = nxt
-    delta = levels[-1].select(
-        "s", "v", "sigma", F.lit(0).cast("long").alias("dq")
-    ).localCheckpoint()
-    edge_parts = []
-    for L in range(len(levels) - 2, -1, -1):
-        p = levels[L]
-        succ = (
-            p.join(adj, p["v"] == adj["u"])
-            .select("s", "v", "sigma", F.col("w").alias("vw"))
-            .join(
-                delta.select(
-                    F.col("s").alias("s2"), F.col("v").alias("vw2"),
-                    F.col("sigma").alias("sw"), F.col("dq").alias("dqw"),
-                ),
-                (F.col("s") == F.col("s2")) & (F.col("vw") == F.col("vw2")),
-            )
-        )
-        ratio = F.col("sigma").cast("double") / F.col("sw").cast("double")
-        fac = F.lit(1.0) + F.col("dqw").cast("double") / 1000000000.0
-        term = F.floor(ratio * fac * 1000000000.0 + F.lit(0.5)).cast("long")
-        with_term = succ.select(
-            "s", "v", "vw", term.alias("tq")
-        ).localCheckpoint()
-        edge_parts.append(
-            with_term.select(
-                F.least("v", "vw").alias("a"),
-                F.greatest("v", "vw").alias("b"),
-                "tq",
-            )
-        )
-        contrib = with_term.groupBy("s", "v").agg(
-            F.sum("tq").cast("long").alias("dq")
-        )
-        delta = (
-            p.join(contrib, ["s", "v"], "left")
-            .select(
-                "s", "v", "sigma",
-                F.coalesce("dq", F.lit(0)).cast("long").alias("dq"),
-            )
-            .localCheckpoint()
-        )
+        for t in terms
+    ]
     acc = edge_parts[0]
     for d in edge_parts[1:]:
         acc = acc.unionByName(d)
@@ -1802,35 +1667,13 @@ def weighted_pagerank(
     eo = e.join(ws, "src").localCheckpoint()
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("r"))
     base = (1.0 - damping) / n
-    for _ in range(n_iters):
-        contrib = eo.join(ranks, eo["src"] == ranks["node"]).select(
-            "dst",
-            F.round(F.col("r") * F.col("w") / F.col("ws") * PICO)
-            .cast("long").alias("c"),
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        dang = (
-            ranks.join(ws, ranks["node"] == ws["src"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("r") * PICO).cast("long")), F.lit(0)
-                ).alias("dgp")
-            )
-        )
-        ranks = (
-            nodes.join(summed, nodes["node"] == summed["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.round(
-                    base
-                    + damping * (F.coalesce("s", F.lit(0)) / PICO)
-                    + damping * (F.col("dgp") / PICO) / n,
-                    9,
-                ).alias("r"),
-            )
-            .localCheckpoint()
-        )
+    ranks = _rank_rounds(
+        ranks, nodes, eo, ws, F.col("r") * F.col("w") / F.col("ws"),
+        base
+        + damping * (F.coalesce("s", F.lit(0)) / PICO)
+        + damping * (F.col("dgp") / PICO) / n,
+        n_iters,
+    )
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -1904,14 +1747,7 @@ def square_count(
     envelope as the clustering-coefficient family; at webgraph scale
     the hub-cap/oriented variants bound it), one (u,w) groupBy, one
     1-row reduction."""
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     both = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -2042,14 +1878,7 @@ def bowtie_decomposition(
     )
     n_nodes = nodes.count()
     rounds = min(max_rounds, max(1, math.ceil(math.log2(max(2, n_nodes)))))
-    for _ in range(rounds):
-        l = r.select(F.col("u"), F.col("v").alias("m"))
-        rt = r.select(F.col("u").alias("m"), F.col("v"))
-        r = (
-            r.unionByName(l.join(rt, "m").select("u", "v"))
-            .distinct()
-            .localCheckpoint()
-        )
+    r = fixpoint(r, _closure_square, rounds)
     mutual = r.join(
         r.select(F.col("v").alias("u"), F.col("u").alias("v")),
         ["u", "v"],
@@ -2220,19 +2049,20 @@ def hyperball_harmonic(
             F.floor(est * HB_EQ + F.lit(0.5)).cast("long").alias("eq"),
         )
 
-    ests = [estimate(regs).withColumnRenamed("eq", "eq0")]
-    cur = regs
-    for t in range(1, rounds + 1):
-        merged = (
+    def merge(cur: DataFrame, _: int) -> DataFrame:
+        return (
             sym.join(cur.withColumnRenamed("node", "a"), "a")
             .select(F.col("b").alias("node"), "j", "reg")
             .unionByName(cur)
             .groupBy("node", "j")
             .agg(F.max("reg").cast("int").alias("reg"))
-            .localCheckpoint()
         )
-        cur = merged
-        ests.append(estimate(cur).withColumnRenamed("eq", f"eq{t}"))
+
+    balls = [regs]
+    fixpoint(regs, merge, rounds, lambda _, cur: balls.append(cur))
+    ests = [
+        estimate(b).withColumnRenamed("eq", f"eq{t}") for t, b in enumerate(balls)
+    ]
 
     out = ests[0]
     for t in range(1, rounds + 1):
@@ -2385,15 +2215,8 @@ def _louvain_phase(und: DataFrame, selfw: DataFrame | None, rounds: int) -> Data
     # subquery twice per round and drove Catalyst's plan-stats
     # estimation into an OOM at 6+ rounds.
     m2 = int(kdeg.agg(F.sum("k")).collect()[0][0] or 0)
-    # the round-over-round frame MUST use the stats-resetting
-    # checkpoint: each round's plan joins comm ~5 times, and Spark 4's
-    # LogicalRDD carries the old plan's sizeInBytes through a plain
-    # localCheckpoint — the estimate compounds 5^rounds and OOMs the
-    # driver at ~8 rounds (engine/checkpoint.localcheckpoint_fresh)
-    from ..engine.checkpoint import localcheckpoint_fresh
 
-    comm = localcheckpoint_fresh(kdeg.select("i", F.col("i").alias("c")))
-    for r in range(rounds):
+    def move(comm: DataFrame, r: int) -> DataFrame:
         tot = comm.join(kdeg, "i").groupBy("c").agg(
             F.sum("k").cast("long").alias("tot")
         )
@@ -2429,7 +2252,7 @@ def _louvain_phase(und: DataFrame, selfw: DataFrame | None, rounds: int) -> Data
         best = cand.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") == 1
         ).select("i", "cj", "g")
-        comm = (
+        return (
             base.join(best, "i", "left")
             .join(kdeg.select("i", "par"), "i")
             .select(
@@ -2445,8 +2268,9 @@ def _louvain_phase(und: DataFrame, selfw: DataFrame | None, rounds: int) -> Data
                 ).otherwise(F.col("ca")).alias("c"),
             )
         )
-        comm = localcheckpoint_fresh(comm)
-    return comm
+
+    comm = localcheckpoint_fresh(kdeg.select("i", F.col("i").alias("c")))
+    return fixpoint(comm, move, rounds)
 
 
 def louvain_sync(
@@ -2485,12 +2309,7 @@ def louvain_sync(
     MATERIALIZED CTEs.
     """
     und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("a"),
-            F.greatest(src_col, dst_col).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        _undirected(edges, src_col, dst_col)
         .withColumn("w", F.lit(1).cast("long"))
         .localCheckpoint()  # consumed by level 1 AND the contraction
     )

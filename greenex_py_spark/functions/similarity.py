@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
+
 # Above this many query rows the exact broadcast path no longer belongs
 # on the driver: 100k × dim-64 float64 ≈ 50 MB of matrix — comfortably
 # broadcastable; orders of magnitude beyond it is a driver OOM, so the
@@ -61,19 +63,20 @@ def cosine_topk(
     rounded to 6 dp *before* ranking so FP noise can't flip ranks.
 
     The driver-side collect of *queries* is the standard
-    broadcast-queries ANN pattern and is guarded: a bounded
-    ``limit(cap+1).count()`` probe (the ``DRIVER_MAX_EDGES`` device —
-    CollectLimit, never a full count) raises before the collect if the
-    query side exceeds ``max_query_rows`` (default
-    :data:`MAX_QUERY_ROWS`), so passing a 10⁹-row "query" table fails
-    fast with direction instead of OOMing the driver.
+    broadcast-queries ANN pattern and is guarded: it is itself bounded
+    (``limit(cap+1)`` — CollectLimit, the ``DRIVER_MAX_EDGES`` device),
+    so the query lineage runs once, the driver holds at most cap+1
+    rows, and more than ``max_query_rows`` (default
+    :data:`MAX_QUERY_ROWS`) raises: passing a 10⁹-row "query" table
+    fails fast with direction instead of OOMing the driver.
     """
     import numpy as np
     import pandas as pd
 
     spark = queries.sparkSession
     cap = MAX_QUERY_ROWS if max_query_rows is None else int(max_query_rows)
-    if queries.limit(cap + 1).count() > cap:
+    qp = queries.select(id_col, vec_col).limit(cap + 1).toPandas()
+    if len(qp) > cap:
         raise ValueError(
             f"cosine_topk query side exceeds {cap} rows; this exact path "
             "broadcasts the query matrix to every corpus partition. For a "
@@ -81,7 +84,6 @@ def cosine_topk(
             "an index path (ivf_topk / lsh_topk), or raise max_query_rows "
             "explicitly if the driver can hold the matrix."
         )
-    qp = queries.select(id_col, vec_col).toPandas()
     qm = np.stack(qp[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
     qn = np.sqrt((qm * qm).sum(axis=1))
     qids = qp[id_col].to_numpy(np.int64)
@@ -761,24 +763,22 @@ def gram_power_iteration(
     u = spark.range(d).select(
         F.col("id").alias("dj"), F.lit(int(u_scale)).alias("u")
     )
-    iterates = []
-    for _ in range(iters):
+
+    def power(u: DataFrame, _: int) -> DataFrame:
         y = (
             gn.join(F.broadcast(u), "dj")
             .groupBy("di")
             .agg(F.sum(F.col("v") * F.col("u")).alias("y"))
         )
         m = y.agg(F.max(F.abs(F.col("y"))).alias("m"))
-        u = (
-            y.crossJoin(F.broadcast(m))
-            .select(
-                F.col("di").alias("dj"),
-                _qz(F.col("y").cast("double") / F.col("m").cast("double") * u_scale)
-                .alias("u"),
-            )
-            .localCheckpoint()
+        return y.crossJoin(F.broadcast(m)).select(
+            F.col("di").alias("dj"),
+            _qz(F.col("y").cast("double") / F.col("m").cast("double") * u_scale)
+            .alias("u"),
         )
-        iterates.append(u)
+
+    iterates = []
+    fixpoint(u, power, iters, lambda _, u: iterates.append(u))
     out = iterates[0].select(F.col("dj").alias("di"), F.col("u").alias("u1"))
     for t, ut in enumerate(iterates[1:], start=2):
         out = out.join(

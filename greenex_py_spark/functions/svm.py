@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
+
 SVM_SCALE = 1_000_000  # micro-unit weight grid
 
 
@@ -62,7 +64,8 @@ def svm_train(
     w = spark.range(n_dims).select(
         F.col("id").cast("long").alias("dim"), F.lit(0).cast("long").alias("wq")
     )
-    for _ in range(iters):
+
+    def step(w: DataFrame, _: int) -> DataFrame:
         warr = w.groupBy().agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "wq"))),
@@ -84,7 +87,7 @@ def svm_train(
             .groupBy("dim")
             .agg(F.sum(F.col("y") * F.col("xv")).cast("long").alias("g"))
         )
-        w = (
+        return (
             w.join(g, "dim", "left")
             .crossJoin(F.broadcast(n))
             .select(
@@ -96,8 +99,9 @@ def svm_train(
                     + F.lit(0.5)
                 ).cast("long").alias("wq"),
             )
-            .localCheckpoint()  # lineage cap per round (CLAUDE.md)
         )
+
+    w = fixpoint(w, step, iters)
     warr = w.groupBy().agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "wq"))),

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
+
 
 def rect_union_moments(rects: np.ndarray) -> tuple[float, float, float]:
     """(area, mx, my) — UN-normalized union area and first moments of
@@ -160,37 +162,38 @@ def _cc_distributed(
 ) -> DataFrame:
     """Distributed min-label propagation to fixpoint (big-graph path).
 
-    Each round **localCheckpoints** the new label table: persist() alone
-    leaves the logical plan growing one join deeper per round, and
-    Catalyst re-analysis of the compounding tree goes super-linear
-    (measured: a diameter-9 chain hung for minutes; with lineage
-    truncation it converges in seconds).  On a cluster with HDFS,
-    `checkpoint()` on a reliable dir is the fault-tolerant variant.
+    The rounds run under ``engine/iterate.fixpoint``, which checkpoints
+    each new label table with reset statistics: persist() alone leaves
+    the logical plan growing one join deeper per round, and Catalyst
+    re-analysis of the compounding tree goes super-linear (measured: a
+    diameter-9 chain hung for minutes; with lineage truncation it
+    converges in seconds).  On a cluster with HDFS, `checkpoint()` on a
+    reliable dir is the fault-tolerant variant.
     """
     labels = polys.select(F.col(key).alias("n"), F.col(key).alias("comp")).localCheckpoint()
     sym = edges.select(F.col("a").alias("n"), F.col("b").alias("m")).unionByName(
         edges.select(F.col("b").alias("n"), F.col("a").alias("m"))
     ).localCheckpoint()
-    for _ in range(max_iter):
+
+    def spread(labels: DataFrame, _: int) -> DataFrame:
         nbr_min = (
             sym.join(labels.withColumnsRenamed({"n": "m", "comp": "mcomp"}), "m")
             .groupBy("n")
             .agg(F.min("mcomp").alias("nbr"))
         )
-        new_labels = (
-            labels.join(nbr_min, "n", "left")
-            .select("n", F.least(F.col("comp"), F.coalesce(F.col("nbr"), F.col("comp"))).alias("comp"))
-            .localCheckpoint()
+        return labels.join(nbr_min, "n", "left").select(
+            "n", F.least(F.col("comp"), F.coalesce(F.col("nbr"), F.col("comp"))).alias("comp")
         )
-        changed = (
+
+    def settled(labels: DataFrame, new_labels: DataFrame) -> bool:
+        return (
             new_labels.withColumnsRenamed({"comp": "new"})
             .join(labels, "n")
             .filter(F.col("new") != F.col("comp"))
             .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+        ) == 0
+
+    labels = fixpoint(labels, spread, max_iter, settled)
     return labels.select(F.col("n").alias(key), "comp")
 
 

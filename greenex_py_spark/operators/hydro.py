@@ -42,8 +42,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.iterate import fixpoint
 from ..geo.grid import GridSpec
 from .focal import quantize_half_away
+
+# round cap of the pointer-doubling loops: after r rounds a pointer
+# spans 2**r downslope steps, so 64 rounds outlast any D8 path and the
+# loops always stop on their own convergence test first
+_DOUBLING_ROUNDS = 64
 
 __all__ = ["D8_DIRS", "macro_cells", "d8_downstream", "flow_accumulation",
            "watershed_labels", "flow_path_length"]
@@ -137,38 +143,38 @@ def d8_downstream(cells: DataFrame) -> DataFrame:
 def flow_accumulation(cells: DataFrame, down: DataFrame) -> DataFrame:
     """[mx, my, acc] — D8 flow accumulation (upstream cell count,
     self included) by pointer-doubling transitive closure of the
-    functional downstream graph: ⌈log₂ L⌉ rounds of two hash joins,
-    ``localCheckpoint`` per round."""
+    functional downstream graph: ⌈log₂ L⌉ rounds of two hash joins
+    under ``engine/iterate.fixpoint``, which checkpoints both frames
+    each round; the reach size is counted once per round."""
     edges = down.select(
         F.col("mx").alias("ux"), F.col("my").alias("uy"),
         F.col("nmx").alias("vx"), F.col("nmy").alias("vy"),
     ).localCheckpoint()
-    reach = edges
-    jump = edges
-    while True:
+    sizes = [edges.count()]  # reach size per round, counted once
+
+    def double(state: tuple, _: int) -> tuple:
+        reach, jump = state
         mid = jump.select(
             F.col("ux").alias("jux"), F.col("uy").alias("juy"),
             F.col("vx").alias("mx_"), F.col("vy").alias("my_"),
         )
-        ext = mid.join(
-            reach,
-            (F.col("mx_") == F.col("ux")) & (F.col("my_") == F.col("uy")),
-        ).select(
+        hop = (F.col("mx_") == F.col("ux")) & (F.col("my_") == F.col("uy"))
+        ext = mid.join(reach, hop).select(
             F.col("jux").alias("ux"), F.col("juy").alias("uy"), "vx", "vy"
         )
-        new_reach = reach.unionByName(ext).dropDuplicates(
-            ["ux", "uy", "vx", "vy"]
-        ).localCheckpoint()
-        jump = mid.join(
-            jump,
-            (F.col("mx_") == F.col("ux")) & (F.col("my_") == F.col("uy")),
-        ).select(
+        jump = mid.join(jump, hop).select(
             F.col("jux").alias("ux"), F.col("juy").alias("uy"), "vx", "vy"
-        ).localCheckpoint()
-        grown = new_reach.count() > reach.count()
-        reach = new_reach
-        if jump.isEmpty() or not grown:
-            break
+        )
+        return (
+            reach.unionByName(ext).dropDuplicates(["ux", "uy", "vx", "vy"]),
+            jump,
+        )
+
+    def settled(_: tuple, state: tuple) -> bool:
+        sizes.append(state[0].count())
+        return state[1].isEmpty() or sizes[-1] == sizes[-2]
+
+    reach = fixpoint((edges, edges), double, _DOUBLING_ROUNDS, settled)[0]
     ups = reach.groupBy(
         F.col("vx").alias("mx"), F.col("vy").alias("my")
     ).agg(F.count(F.lit(1)).alias("n_up"))
@@ -183,33 +189,33 @@ def watershed_labels(cells: DataFrame, down: DataFrame) -> DataFrame:
     (the D8 path's endpoint; pits label themselves).  Pointer squaring:
     pt(u) ← pt(pt(u)) with pits as fixed points converges to the
     terminal in ⌈log₂ L⌉ rounds — one self-join per round keyed by
-    cell, ``localCheckpoint`` per round; no per-path sequential walk
-    anywhere."""
+    cell under ``engine/iterate.fixpoint``, which checkpoints each
+    round's pointers; no per-path sequential walk anywhere."""
     pt = cells.join(down, ["mx", "my"], "left").select(
         "mx", "my",
         F.coalesce(F.col("nmx"), F.col("mx")).alias("px"),
         F.coalesce(F.col("nmy"), F.col("my")).alias("py"),
     ).localCheckpoint()
-    while True:
+
+    def square(pt: DataFrame, _: int) -> DataFrame:
         a, b = pt.alias("a"), pt.alias("b")
-        nxt = a.join(
+        return a.join(
             b,
             (F.col("a.px") == F.col("b.mx"))
             & (F.col("a.py") == F.col("b.my")),
         ).select(
             F.col("a.mx").alias("mx"), F.col("a.my").alias("my"),
             F.col("b.px").alias("px"), F.col("b.py").alias("py"),
-        ).localCheckpoint()
-        changed = (
-            nxt.join(pt, ["mx", "my"])
-            .filter(
-                (nxt["px"] != pt["px"]) | (nxt["py"] != pt["py"])
-            )
-            .count()
         )
-        pt = nxt
-        if changed == 0:
-            break
+
+    def settled(pt: DataFrame, nxt: DataFrame) -> bool:
+        return (
+            nxt.join(pt, ["mx", "my"])
+            .filter((nxt["px"] != pt["px"]) | (nxt["py"] != pt["py"]))
+            .count()
+        ) == 0
+
+    pt = fixpoint(pt, square, _DOUBLING_ROUNDS, settled)
     return pt.select(
         "mx", "my", F.col("px").alias("pmx"), F.col("py").alias("pmy")
     )
@@ -224,8 +230,9 @@ def flow_path_length(cells: DataFrame, down: DataFrame) -> DataFrame:
 
     Pointer squaring with accumulators: state (ptr, steps, diags)
     composes as ptr ← ptr∘ptr, steps ← steps_a + steps_b (paths are
-    functional, so the sum is exact) — ⌈log₂ L⌉ self-joins with
-    ``localCheckpoint`` per round, never an L-step sequential walk.
+    functional, so the sum is exact) — ⌈log₂ L⌉ self-joins under
+    ``engine/iterate.fixpoint``, which checkpoints each round's state;
+    never an L-step sequential walk.
     The GRASS r.flow "length of flow path" readout at macro scale.
     """
     diag = (
@@ -241,9 +248,10 @@ def flow_path_length(cells: DataFrame, down: DataFrame) -> DataFrame:
         F.when(F.col("nmx").isNotNull() & diag, 1).otherwise(0).cast("long")
         .alias("dg"),
     ).localCheckpoint()
-    while True:
+
+    def square(pt: DataFrame, _: int) -> DataFrame:
         a, b = pt.alias("a"), pt.alias("b")
-        nxt = a.join(
+        return a.join(
             b,
             (F.col("a.px") == F.col("b.mx"))
             & (F.col("a.py") == F.col("b.my")),
@@ -252,16 +260,17 @@ def flow_path_length(cells: DataFrame, down: DataFrame) -> DataFrame:
             F.col("b.px").alias("px"), F.col("b.py").alias("py"),
             (F.col("a.st") + F.col("b.st")).alias("st"),
             (F.col("a.dg") + F.col("b.dg")).alias("dg"),
-        ).localCheckpoint()
-        changed = (
+        )
+
+    def settled(pt: DataFrame, nxt: DataFrame) -> bool:
+        return (
             nxt.join(pt.select("mx", "my", F.col("st").alias("st0")),
                      ["mx", "my"])
             .filter(nxt["st"] != F.col("st0"))
             .count()
-        )
-        pt = nxt
-        if changed == 0:
-            break
+        ) == 0
+
+    pt = fixpoint(pt, square, _DOUBLING_ROUNDS, settled)
     return pt.select(
         "mx", "my",
         F.col("st").alias("n_steps"), F.col("dg").alias("n_diag"),
@@ -296,9 +305,9 @@ def cost_distance(cells: DataFrame, max_rounds: int = 200) -> DataFrame:
     Shape: macro coarsening (``macro_cells``) is the distributed
     stage — the full raster reduces factor²-fold in one mapInPandas +
     one two-phase agg; the relaxation then runs Bellman–Ford rounds
-    (one hash join keyed by cell + one min-agg per round,
-    ``localCheckpoint``, monotone convergence: the distance table only
-    ever improves).  Rounds = max hop count of an optimal path —
+    (one hash join keyed by cell + one min-agg per round under
+    ``engine/iterate.fixpoint``, monotone convergence: the distance
+    table only ever improves).  Rounds = max hop count of an optimal path —
     bounded by the macro-grid diameter, NOT the raster size; at
     continental scale the same loop runs with cells sharded by
     region (each round stays a keyed join), which is the standard
@@ -328,27 +337,21 @@ def cost_distance(cells: DataFrame, max_rounds: int = 200) -> DataFrame:
     d = cc.filter(F.col("zq") > 0).select(
         "mx", "my", F.lit(0).cast("long").alias("d")
     ).localCheckpoint()
-    n, s = d.count(), 0
-    for _ in range(max_rounds):
-        relax = (
-            d.join(edges, ["mx", "my"])
-            .select(
-                F.col("nmx").alias("mx"), F.col("nmy").alias("my"),
-                (F.col("d") + F.col("w")).alias("d"),
-            )
+    # (cells reached, Σd) of each round, computed once and carried
+    sig = [(d.count(), 0)]
+
+    def relax(d: DataFrame, _: int) -> DataFrame:
+        step = d.join(edges, ["mx", "my"]).select(
+            F.col("nmx").alias("mx"), F.col("nmy").alias("my"),
+            (F.col("d") + F.col("w")).alias("d"),
         )
-        nd = (
-            d.unionByName(relax)
-            .groupBy("mx", "my")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
-        n2 = nd.count()
-        s2 = nd.agg(F.sum("d")).collect()[0][0]
-        d = nd
-        if n2 == n and s2 == s:
-            break
-        n, s = n2, s2
+        return d.unionByName(step).groupBy("mx", "my").agg(F.min("d").alias("d"))
+
+    def stable(_: DataFrame, nd: DataFrame) -> bool:
+        sig.append((nd.count(), nd.agg(F.sum("d")).collect()[0][0]))
+        return sig[-1] == sig[-2]
+
+    d = fixpoint(d, relax, max_rounds, stable)
     return cc.join(d, ["mx", "my"], "left").select(
         "mx", "my", F.col("d").alias("cost")
     )

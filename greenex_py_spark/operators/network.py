@@ -76,6 +76,10 @@ def nearest_node(
     tier so the retry anti-joins never re-run it (measured 38 s → the
     shuffle path on the 1.5M-node demo lattice).  Rows identical
     either way (1-NN under the same total order).
+
+    The primary snap tier is persisted lazily and never unpersisted
+    here: its cache entry lives until ``spark.catalog.clearCache()`` or
+    until the block manager evicts it (LRU).
     """
     from ..geo.cells import _BASE
     from .spatial_join import bbox_cover_cells, with_point_cell

@@ -797,15 +797,18 @@ def test_transform_with_state_surface(spark):
 
 
 def test_localcheckpoint_fresh_resets_plan_stats(spark):
-    """The stats-resetting checkpoint (BENCH/SCALE_AUDIT.md): plain
-    localCheckpoint carries the old plan's sizeInBytes into the
-    LogicalRDD (so iterative self-joins compound it k^rounds);
-    localcheckpoint_fresh must return (a) identical rows, (b) a plan
-    whose sizeInBytes is back to the 63-bit default, (c) a frame that
-    re-evaluates without recomputation (checkpointed, not lazy)."""
+    """The stats-resetting checkpoint behind engine/iterate.fixpoint
+    (BENCH/SCALE_AUDIT.md): plain localCheckpoint carries the old plan's
+    sizeInBytes into the LogicalRDD (so iterative self-joins compound it
+    k^rounds); localcheckpoint_fresh must return (a) identical rows,
+    (b) a plan whose sizeInBytes is back to the 63-bit default, (c) a
+    frame over the checkpointed InternalRow RDD itself — no Row round
+    trip, no recomputation.  fixpoint must keep the stats reset across
+    self-join rounds, stop after the round whose ``converged`` is true
+    (or whose step returns its input), and never exceed max_rounds."""
     from pyspark.sql import functions as F
 
-    from greenex_py_spark.engine.checkpoint import localcheckpoint_fresh
+    from greenex_py_spark.engine.iterate import fixpoint, localcheckpoint_fresh
 
     def bits(df):
         return int(
@@ -828,3 +831,26 @@ def test_localcheckpoint_fresh_resets_plan_stats(spark):
     want = sorted(tuple(r) for r in big.collect())
     assert got == want
     assert fresh.count() == 2 == fresh.count()  # stable re-evaluation
+    rdd = fresh._jdf.queryExecution().analyzed().rdd()
+    assert rdd.isCheckpointed()  # the checkpoint's own RDD, not a copy
+    assert "toJavaRDD" not in rdd.toDebugString()
+
+    steps = []
+
+    def square(df, r):
+        steps.append(r)
+        return df.join(df.withColumnsRenamed({"v": "w"}), "i").select(
+            "i", (F.col("v") + F.col("w")).alias("v")
+        )
+
+    out = fixpoint(a, square, 3)
+    assert steps == [0, 1, 2]  # never more than max_rounds
+    assert sorted(tuple(r) for r in out.collect()) == [("x", 8), ("y", 16)]
+    assert bits(out) <= 64  # no compounding across the rounds
+    steps.clear()
+    out = fixpoint(a, square, 10, lambda prev, cur: cur.agg(F.max("v")).first()[0] >= 8)
+    assert steps == [0, 1]  # stops after the round that converged
+    assert sorted(tuple(r) for r in out.collect()) == [("x", 4), ("y", 8)]
+    steps.clear()
+    assert fixpoint(a, lambda df, r: steps.append(r) or df, 10) is a
+    assert steps == [0]  # a step returning its input ends the loop

@@ -245,6 +245,47 @@ def test_operators_are_fixture_free():
     assert not offenders, offenders
 
 
+def test_round_loops_checkpoint_through_fixpoint():
+    """No loop body in the package checkpoints by hand: a plain
+    ``localCheckpoint`` carried round to round compounds plan statistics
+    (BENCH/SCALE_AUDIT.md), so every round loop runs under
+    ``engine/iterate.fixpoint``, the one place that checkpoints state.
+    Functions defined inside a loop body are not part of it."""
+    import ast
+    import pathlib
+
+    import greenex_py_spark
+
+    pkg = pathlib.Path(greenex_py_spark.__file__).parent
+    banned = {"localCheckpoint", "localcheckpoint_fresh"}
+
+    def calls(node, in_loop):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                yield from calls(ch, False)
+                continue
+            if in_loop and isinstance(ch, ast.Call):
+                f = ch.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in banned:
+                    yield ch.lineno
+            yield from calls(ch, in_loop or isinstance(ch, (ast.For, ast.While)))
+
+    offenders = [
+        f"{p.relative_to(pkg)}:{line}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg).as_posix() != "engine/iterate.py"
+        for line in calls(ast.parse(p.read_text()), False)
+    ]
+    assert not offenders, offenders
+    stats_resets = [
+        p.name for p in pkg.rglob("*.py")
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "localcheckpoint_fresh"
+    ]
+    assert stats_resets == ["iterate.py"]
+
+
 def test_gridspec_from_tiles_roundtrip(spark):
     """GridSpec recovered from tile-table metadata equals the explicit
     fixture grid, for both the 10 m city rasters and the 5 m surface."""
