@@ -40,24 +40,22 @@ def rect_buffer_candidates(
     greens: DataFrame,
     target_dist: float,
     min_area: float,
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Candidate (point, greenspace) pairs: rectangle intersects the
     circular buffer, i.e. dist(point, rect) <= target_dist.
 
-    ``points``: [id, x, y, ...]; ``greens``: [gs_id, minx, miny, maxx,
+    ``points``: [id, x, y]; ``greens``: [gs_id, minx, miny, maxx,
     maxy, area, cx, cy].  Candidates come from the cell-cover equi-join
     (pad = target_dist) so the plan scales — the exact bbox-distance test
     (codegen arithmetic, exact for axis-aligned rects) then removes cover
-    false-positives.  Duplicate pairs from multi-cell covers are left in:
-    every consumer below is a min()-style agg, so dedup would be a wasted
-    shuffle.  General polygons go through operators/spatial_join.py's
-    PiP/clip kernels instead.
+    false-positives.  Each point probes one cell, so every pair appears
+    once (spatial_join.cell_candidates).  General polygons go through
+    operators/spatial_join.py's PiP/clip kernels instead.
     """
     from .spatial_join import cell_candidates
 
     g = greens.filter(F.col("area") >= F.lit(min_area))
-    cand = cell_candidates(points, g, pad=float(target_dist), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points, g, pad=float(target_dist))
     dx = F.greatest(F.lit(0.0), F.col("minx") - F.col("x"), F.col("x") - F.col("maxx"))
     dy = F.greatest(F.lit(0.0), F.col("miny") - F.col("y"), F.col("y") - F.col("maxy"))
     return cand.filter((dx * dx + dy * dy) <= F.lit(float(target_dist) ** 2))
@@ -69,20 +67,31 @@ def shortest_distance_greenspace(
     target_dist: float = 300.0,
     min_area: float = 400.0,
     id_col: str = "id",
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Euclidean / centroids variant → [id, greenspace_within, distance_to_greenspace].
 
     Output contract matches README.md:317-321: bool + clamped rounded
     float, misses get ``distance == target_dist`` exactly.
     """
-    cand = rect_buffer_candidates(points, greens, target_dist, min_area, broadcast_greens)
+    cand = rect_buffer_candidates(points.select(id_col, "x", "y"), greens, target_dist, min_area)
     d2 = (F.col("cx") - F.col("x")) ** 2 + (F.col("cy") - F.col("y")) ** 2
     near = (
         cand.select(id_col, F.round(F.sqrt(d2), 0).alias("dist"))
         .groupBy(id_col)
         .agg(F.min("dist").alias("min_dist"))
     )
+    return _outcome_clamp(points, near, target_dist, id_col)
+
+
+def _outcome_clamp(
+    points: DataFrame, near: DataFrame, target_dist: float, id_col: str
+) -> DataFrame:
+    """The §2.9 outcome/clamp shared by every accessibility variant:
+    ``near`` [id, min_dist] → one row per PoI id of ``points`` with
+    ``greenspace_within = min_dist <= target_dist`` evaluated BEFORE the
+    clamp (accessibility.py:313-316; a miss → False) and
+    ``distance_to_greenspace = least(min_dist, target_dist)``, a miss
+    clamped to exactly ``target_dist`` (accessibility.py:318-320)."""
     td = F.lit(float(target_dist))
     return (
         points.select(id_col).distinct()
@@ -103,7 +112,6 @@ def two_step_fca(
     id_col: str = "id",
     supply_col: str = "area",
     weight_scale: float = 1_000_000.0,
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Two-step floating catchment area (2SFCA) greenspace accessibility.
 
@@ -128,7 +136,7 @@ def two_step_fca(
     from .spatial_join import cell_candidates
 
     g = greens.filter(F.col("area") >= F.lit(float(min_area)))
-    cand = cell_candidates(points, g, pad=float(radius), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points.select(id_col, "x", "y"), g, pad=float(radius))
     dx = F.col("cx") - F.col("x")
     dy = F.col("cy") - F.col("y")
     pairs = cand.filter(dx * dx + dy * dy <= F.lit(float(radius) ** 2)).select(
@@ -163,7 +171,6 @@ def two_step_fca_decay(
     supply_col: str = "area",
     w_scale: float = 1_000_000.0,
     r_scale: float = 1e12,
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Enhanced 2SFCA (E2SFCA, Luo & Qi 2009) with a Gaussian distance
     decay inside the catchment instead of the binary membership of
@@ -186,7 +193,7 @@ def two_step_fca_decay(
     from .spatial_join import cell_candidates
 
     g = greens.filter(F.col("area") >= F.lit(float(min_area)))
-    cand = cell_candidates(points, g, pad=float(radius), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points.select(id_col, "x", "y"), g, pad=float(radius))
     dx = F.col("cx") - F.col("x")
     dy = F.col("cy") - F.col("y")
     d2 = dx * dx + dy * dy
@@ -229,13 +236,15 @@ def nearest_k(
     id_col: str = "id",
     target_id_col: str = "gs_id",
     max_dist: float | None = None,
-    broadcast_targets: bool = True,
 ) -> DataFrame:
-    """General k-NN join point→target-point (J3/J4 in SURVEY.md §2.3).
+    """General k-NN join point→target-point (J3/J4 in SURVEY.md §2.3)
+    → [id, x, y, target id, nn_dist, nn_rank].
 
     Distance-bounded when ``max_dist`` given (the cKDTree
-    ``distance_upper_bound`` pattern, GreenExp/visibility.py:706-707).
-    Top-k per point via window rank over the candidate pairs.
+    ``distance_upper_bound`` pattern, GreenExp/visibility.py:706-707):
+    the targets are the cell cover with ``pad = max_dist``, each point
+    probes its home cell, and the exact ``d² <= max_dist²`` test
+    filters.  Top-k per point via window rank over the candidate pairs.
 
     Envelope: with ``max_dist=None`` this falls back to
     ``crossJoin(broadcast(targets))`` — correct for the reference's
@@ -254,18 +263,25 @@ def nearest_k(
                 f"{MAX_CROSSJOIN_TARGETS} rows. Pass max_dist to use the "
                 "distance-bounded join, or pre-filter the target set."
             )
+    from .spatial_join import cell_candidates
+
+    pts = points.select(id_col, "x", "y")
     t = targets.select(
         target_id_col,
         F.col("x").alias("_tx"),
         F.col("y").alias("_ty"),
     )
-    if broadcast_targets:
-        t = F.broadcast(t)
-    pairs = points.crossJoin(t) if max_dist is None else points.join(
-        t,
-        ((F.col("_tx") - F.col("x")) ** 2 + (F.col("_ty") - F.col("y")) ** 2)
-        <= F.lit(float(max_dist) ** 2),
-    )
+    if max_dist is None:
+        pairs = pts.crossJoin(F.broadcast(t))
+    else:
+        box = t.select(
+            "*", F.col("_tx").alias("minx"), F.col("_ty").alias("miny"),
+            F.col("_tx").alias("maxx"), F.col("_ty").alias("maxy"),
+        )
+        pairs = cell_candidates(pts, box, pad=float(max_dist)).filter(
+            ((F.col("_tx") - F.col("x")) ** 2 + (F.col("_ty") - F.col("y")) ** 2)
+            <= F.lit(float(max_dist) ** 2)
+        ).select(*pts.columns, *t.columns)
     dist = F.sqrt((F.col("_tx") - F.col("x")) ** 2 + (F.col("_ty") - F.col("y")) ** 2)
     w = Window.partitionBy(id_col).orderBy(F.col("nn_dist").asc(), F.col(target_id_col).asc())
     return (
@@ -281,7 +297,6 @@ def rect_buffer_candidates_polygon32(
     greens: DataFrame,
     target_dist: float,
     min_area: float,
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Reference-exact candidate set: a greenspace is a candidate iff its
     polygon intersects the **32-segment buffer polygon** (shapely's
@@ -296,7 +311,7 @@ def rect_buffer_candidates_polygon32(
     from .spatial_join import cell_candidates
 
     g = greens.filter(F.col("area") >= F.lit(min_area))
-    cand = cell_candidates(points, g, pad=float(target_dist), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points, g, pad=float(target_dist))
 
     @F.pandas_udf(T.BooleanType())
     def intersects32(x: pd.Series, y: pd.Series, minx: pd.Series, miny: pd.Series,
@@ -321,23 +336,16 @@ def shortest_distance_greenspace_exact(
 ) -> DataFrame:
     """Euclidean/centroids with the reference-exact 32-gon candidate set
     (golden-parity path; tests/test_reference_parity.py)."""
-    cand = rect_buffer_candidates_polygon32(points, greens, target_dist, min_area)
+    cand = rect_buffer_candidates_polygon32(
+        points.select(id_col, "x", "y"), greens, target_dist, min_area
+    )
     d2 = (F.col("cx") - F.col("x")) ** 2 + (F.col("cy") - F.col("y")) ** 2
     near = (
         cand.select(id_col, F.sqrt(d2).alias("dist"))
         .groupBy(id_col)
         .agg(F.round(F.min("dist"), 0).alias("min_dist"))
     )
-    td = F.lit(float(target_dist))
-    return (
-        points.select(id_col).distinct()
-        .join(near, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("min_dist") <= td, F.lit(False)).alias("greenspace_within"),
-            F.coalesce(F.least(F.col("min_dist"), td), td).alias("distance_to_greenspace"),
-        )
-    )
+    return _outcome_clamp(points, near, target_dist, id_col)
 
 
 def huff_shares(

@@ -74,9 +74,7 @@ def rect_union_stats(rects: np.ndarray) -> tuple[float, float, float]:
     return area, mx / area, my / area
 
 
-def overlap_edges(
-    polys: DataFrame, key: str = "gs_id", broadcast_cover: bool = True
-) -> DataFrame:
+def overlap_edges(polys: DataFrame, key: str = "gs_id") -> DataFrame:
     """[a, b] — intersecting pairs (a < b), boundary touch included
     (shapely ``intersects`` semantics)."""
     from .spatial_join import bbox_cover_cells
@@ -87,13 +85,11 @@ def overlap_edges(
         F.col("minx").alias("aminx"), F.col("miny").alias("aminy"),
         F.col("maxx").alias("amaxx"), F.col("maxy").alias("amaxy"),
     )
-    r = cover.select(
+    r = F.broadcast(cover.select(
         F.col(key).alias("b"), F.col("cell"),
         F.col("minx").alias("bminx"), F.col("miny").alias("bminy"),
         F.col("maxx").alias("bmaxx"), F.col("maxy").alias("bmaxy"),
-    )
-    if broadcast_cover:
-        r = F.broadcast(r)
+    ))
     return (
         l.join(r, "cell")
         .filter(F.col("a") < F.col("b"))
@@ -325,9 +321,7 @@ def dissolve_rects_sharded(
 # ---------------------------------------------------------------------------
 
 
-def overlap_edges_polygons(
-    polys: DataFrame, key: str = "gs_id", broadcast_cover: bool = True
-) -> DataFrame:
+def overlap_edges_polygons(polys: DataFrame, key: str = "gs_id") -> DataFrame:
     """[a, b] — intersecting polygon pairs (a < b): bbox candidate pairs
     from the shared rect machinery (:func:`overlap_edges` — cell-cover
     equi-join + bbox filter, geometry-free so the broadcast carries only
@@ -341,7 +335,7 @@ def overlap_edges_polygons(
 
     rings = polys.select(key, "rings")
     cand = (
-        overlap_edges(polys.drop("rings"), key, broadcast_cover)
+        overlap_edges(polys.drop("rings"), key)
         .join(F.broadcast(rings.withColumnsRenamed({key: "a", "rings": "rings_a"})), "a")
         .join(F.broadcast(rings.withColumnsRenamed({key: "b", "rings": "rings_b"})), "b")
     )

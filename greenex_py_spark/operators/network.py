@@ -44,7 +44,6 @@ def nearest_node(
     nodes: DataFrame,
     id_col: str = "id",
     max_snap_dist: float = 300.0,
-    broadcast_nodes: bool | None = None,
 ) -> DataFrame:
     """[id, x, y, node_id, penalty_home] — 1-NN snap, tie-break node_id.
 
@@ -68,14 +67,13 @@ def nearest_node(
     4×-then-16× cascade (the 16× ring is a superset of the 4× one, so
     collapsing tiers changes nothing semantically).
 
-    ``broadcast_nodes=None`` sizes the node table with the same
-    bounded probe as the Dijkstra dispatcher: a city-scale layer
-    broadcasts its cover table (zero shuffle on the probe side), a
-    continental one (> ``DRIVER_MAX_EDGES`` rows) switches the cell
-    joins to plain shuffle equi-joins and localCheckpoints the primary
-    tier so the retry anti-joins never re-run it (measured 38 s → the
-    shuffle path on the 1.5M-node demo lattice).  Rows identical
-    either way (1-NN under the same total order).
+    The node table is sized with the same bounded probe as the
+    Dijkstra dispatcher, and the probe always decides: a city-scale
+    layer broadcasts its cover table (zero shuffle on the probe side),
+    a continental one (> ``DRIVER_MAX_EDGES`` rows) switches the cell
+    joins to plain shuffle equi-joins (measured 38 s → the shuffle path
+    on the 1.5M-node demo lattice).  Rows identical either way (1-NN
+    under the same total order).
 
     The primary snap tier is persisted lazily and never unpersisted
     here: its cache entry lives until ``spark.catalog.clearCache()`` or
@@ -84,14 +82,11 @@ def nearest_node(
     from ..geo.cells import _BASE
     from .spatial_join import bbox_cover_cells, with_point_cell
 
-    if broadcast_nodes is None:
-        broadcast_nodes = _graph_fits_driver(nodes, DRIVER_MAX_EDGES)
+    broadcast_nodes = _graph_fits_driver(nodes, DRIVER_MAX_EDGES)
     n_src = nodes.select("node_id", F.col("x").alias("nx"), F.col("y").alias("ny"))
     cover = bbox_cover_cells(
-        n_src.withColumn("minx", F.col("nx")).withColumn("miny", F.col("ny"))
-        .withColumn("maxx", F.col("nx")).withColumn("maxy", F.col("ny")),
-        pad=max_snap_dist,
-    ).drop("minx", "miny", "maxx", "maxy")
+        n_src, pad=max_snap_dist, minx="nx", miny="ny", maxx="nx", maxy="ny"
+    )
     pts = with_point_cell(points.select(id_col, "x", "y"))
     ddx = F.col("nx") - F.col("x")
     ddy = F.col("ny") - F.col("y")
@@ -390,12 +385,22 @@ def entrance_nodes_rect(
 ) -> DataFrame:
     """[gs_id, node_id, ex, ey] — nodes within ``tol`` of a rectangle
     *boundary* (accessibility.py:245: ``distance(geom.boundary) < 20``;
-    strict <).  Pure column arithmetic:
+    strict <).  Candidates come from the cell join (greens are the
+    cover, ``pad = tol``; nodes probe their home cell), then pure column
+    arithmetic:
 
     outside → distance to rect; inside → distance to nearest edge.
     """
-    n = nodes.select("node_id", F.col("x").alias("ex"), F.col("y").alias("ey"))
-    g = F.broadcast(greens.select("gs_id", "minx", "miny", "maxx", "maxy"))
+    from .spatial_join import cell_candidates
+
+    n = cell_candidates(
+        nodes.select("node_id", "x", "y"),
+        greens.select("gs_id", "minx", "miny", "maxx", "maxy"),
+        pad=float(tol),
+    ).select(
+        "node_id", F.col("x").alias("ex"), F.col("y").alias("ey"),
+        "gs_id", "minx", "miny", "maxx", "maxy",
+    )
     dx = F.greatest(F.lit(0.0), F.col("minx") - F.col("ex"), F.col("ex") - F.col("maxx"))
     dy = F.greatest(F.lit(0.0), F.col("miny") - F.col("ey"), F.col("ey") - F.col("maxy"))
     outside = F.sqrt(dx * dx + dy * dy)
@@ -408,7 +413,7 @@ def entrance_nodes_rect(
         & (F.col("ey") >= F.col("miny")) & (F.col("ey") <= F.col("maxy")),
         inside,
     ).otherwise(outside)
-    return n.join(g, bdist < F.lit(tol)).select("gs_id", "node_id", "ex", "ey")
+    return n.filter(bdist < F.lit(tol)).select("gs_id", "node_id", "ex", "ey")
 
 
 # ---------------------------------------------------------------------------
@@ -434,7 +439,11 @@ def shortest_distance_greenspace_network(
     and picks the path adaptively (``DRIVER_MAX_EDGES``);
     ``partitioned=True`` forces the no-broadcast cell-partitioned
     Dijkstra (row-identical; the sharded-network scale path), ``False``
-    forces the broadcast CSR."""
+    forces the broadcast CSR.  Candidate greens per PoI come from the
+    cell join (``rect_buffer_candidates``), entrances from
+    :func:`entrance_nodes_rect`."""
+    from .accessibility import _outcome_clamp, rect_buffer_candidates
+
     g = greens.filter(F.col("area") >= F.lit(min_area))
     snapped = nearest_node(points, nodes, id_col)
     if partitioned is None:
@@ -447,11 +456,8 @@ def shortest_distance_greenspace_network(
     ent = entrance_nodes_rect(nodes, g, tol=20.0)
 
     # candidate greens: rect ∩ buffer(target) per PoI (the per-row clip)
-    pdx = F.greatest(F.lit(0.0), F.col("minx") - F.col("x"), F.col("x") - F.col("maxx"))
-    pdy = F.greatest(F.lit(0.0), F.col("miny") - F.col("y"), F.col("y") - F.col("maxy"))
-    cand = points.select(id_col, "x", "y").join(
-        F.broadcast(g.select("gs_id", "minx", "miny", "maxx", "maxy", "cx", "cy")),
-        (pdx * pdx + pdy * pdy) <= F.lit(float(target_dist) ** 2),
+    cand = rect_buffer_candidates(
+        points.select(id_col, "x", "y"), greens, target_dist, min_area
     ).select(id_col, "gs_id", "cx", "cy")
 
     paths = (
@@ -469,16 +475,7 @@ def shortest_distance_greenspace_network(
     near = paths.select(id_col, dist.alias("d")).groupBy(id_col).agg(
         F.round(F.min("d"), 0).alias("min_dist")
     )
-    td = F.lit(float(target_dist))
-    return (
-        points.select(id_col).distinct()
-        .join(near, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("min_dist") <= td, F.lit(False)).alias("greenspace_within"),
-            F.coalesce(F.least(F.col("min_dist"), td), td).alias("distance_to_greenspace"),
-        )
-    )
+    return _outcome_clamp(points, near, target_dist, id_col)
 
 
 def shortest_distance_greenspace_entrance_euclid(
@@ -493,15 +490,14 @@ def shortest_distance_greenspace_entrance_euclid(
     """Euclidean + entrances variant (accessibility.py:287-301):
     kd-tree over entrance-node positions of buffer-clipped greens,
     restricted to the PoI's ego set."""
+    from .accessibility import _outcome_clamp, rect_buffer_candidates
+
     g = greens.filter(F.col("area") >= F.lit(min_area))
     snapped = nearest_node(points, nodes, id_col)
     reach = bounded_network_distances_auto(snapped, nodes, edges, target_dist * 1.5, id_col)
     ent = entrance_nodes_rect(nodes, g, tol=20.0)
-    pdx = F.greatest(F.lit(0.0), F.col("minx") - F.col("x"), F.col("x") - F.col("maxx"))
-    pdy = F.greatest(F.lit(0.0), F.col("miny") - F.col("y"), F.col("y") - F.col("maxy"))
-    cand = points.select(id_col, "x", "y").join(
-        F.broadcast(g.select("gs_id", "minx", "miny", "maxx", "maxy")),
-        (pdx * pdx + pdy * pdy) <= F.lit(float(target_dist) ** 2),
+    cand = rect_buffer_candidates(
+        points.select(id_col, "x", "y"), greens, target_dist, min_area
     ).select(id_col, "x", "y", "gs_id")
     near = (
         cand.join(F.broadcast(ent), "gs_id")  # ent is green-layer-sized (dim)
@@ -513,16 +509,7 @@ def shortest_distance_greenspace_entrance_euclid(
         .groupBy(id_col)
         .agg(F.round(F.min("d"), 0).alias("min_dist"))
     )
-    td = F.lit(float(target_dist))
-    return (
-        points.select(id_col).distinct()
-        .join(near, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("min_dist") <= td, F.lit(False)).alias("greenspace_within"),
-            F.coalesce(F.least(F.col("min_dist"), td), td).alias("distance_to_greenspace"),
-        )
-    )
+    return _outcome_clamp(points, near, target_dist, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -852,15 +839,19 @@ def entrance_nodes_clipped(
     from ..geo.kernels import (
         box_ring, circle_polygon, clip_polygon_convex, points_to_ring_distance,
     )
+    from .spatial_join import cell_candidates
 
     # candidate greens per PoI (32-gon intersect test happens in-kernel
     # via the clip itself)
     pdx = F.greatest(F.lit(0.0), F.col("minx") - F.col("x"), F.col("x") - F.col("maxx"))
     pdy = F.greatest(F.lit(0.0), F.col("miny") - F.col("y"), F.col("y") - F.col("maxy"))
-    cand = points.select(id_col, "x", "y").join(
-        F.broadcast(greens.select("gs_id", "minx", "miny", "maxx", "maxy")),
+    cand = cell_candidates(
+        points.select(id_col, "x", "y"),
+        greens.select("gs_id", "minx", "miny", "maxx", "maxy"),
+        pad=float(target_dist),
+    ).filter(
         (pdx * pdx + pdy * pdy) <= F.lit(float(target_dist) ** 2),
-    )
+    ).drop("cell")
     npos = reach  # [id, node_id, net_dist] joined with coords by caller
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -907,6 +898,8 @@ def shortest_distance_greenspace_network_exact(
     """Network accessibility with reference-exact clipped-boundary
     entrances (golden-parity path; the rect-boundary variant is the
     gate default)."""
+    from .accessibility import _outcome_clamp
+
     g = greens.filter(F.col("area") >= F.lit(min_area))
     snapped = nearest_node(points, nodes, id_col)
     reach = bounded_network_distances_auto(snapped, nodes, edges, target_dist * 1.5, id_col)
@@ -926,13 +919,4 @@ def shortest_distance_greenspace_network_exact(
     near = paths.select(id_col, dist.alias("d")).groupBy(id_col).agg(
         F.round(F.min("d"), 0).alias("min_dist")
     )
-    td = F.lit(float(target_dist))
-    return (
-        points.select(id_col).distinct()
-        .join(near, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("min_dist") <= td, F.lit(False)).alias("greenspace_within"),
-            F.coalesce(F.least(F.col("min_dist"), td), td).alias("distance_to_greenspace"),
-        )
-    )
+    return _outcome_clamp(points, near, target_dist, id_col)

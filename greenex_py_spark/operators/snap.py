@@ -35,7 +35,24 @@ from pyspark.sql import functions as F
 __all__ = ["nearest_edge", "candidate_edges"]
 
 
+def _seg_cover(segments: DataFrame, pad: float) -> DataFrame:
+    """[edge_id, x1, y1, x2, y2, cell] — each segment on every cell its
+    ``pad``-grown bbox covers (the broadcast side of both snaps)."""
+    from .spatial_join import bbox_cover_cells
+
+    seg = segments.select("edge_id", "x1", "y1", "x2", "y2")
+    return bbox_cover_cells(
+        seg.withColumn("minx", F.least("x1", "x2"))
+        .withColumn("miny", F.least("y1", "y2"))
+        .withColumn("maxx", F.greatest("x1", "x2"))
+        .withColumn("maxy", F.greatest("y1", "y2")),
+        pad=pad,
+    ).drop("minx", "miny", "maxx", "maxy")
+
+
 def _proj_cols():
+    """(d², t) of the point (x, y) against segment (x1, y1)→(x2, y2),
+    both unrounded."""
     dx = F.col("x2") - F.col("x1")
     dy = F.col("y2") - F.col("y1")
     len2 = dx * dx + dy * dy
@@ -45,11 +62,8 @@ def _proj_cols():
     )
     cx = F.col("x1") + t * dx
     cy = F.col("y1") + t * dy
-    d = F.sqrt(
-        (F.col("x") - cx) * (F.col("x") - cx)
-        + (F.col("y") - cy) * (F.col("y") - cy)
-    )
-    return F.round(d, 6), F.round(t + F.lit(0.0), 6)
+    d2 = (F.col("x") - cx) * (F.col("x") - cx) + (F.col("y") - cy) * (F.col("y") - cy)
+    return d2, t
 
 
 def nearest_edge(
@@ -63,18 +77,13 @@ def nearest_edge(
     ``segments``: (edge_id, x1, y1, x2, y2) straight-line segments
     (undirected: feed canonical src<dst rows to avoid double work).
     """
-    seg = segments.select("edge_id", "x1", "y1", "x2", "y2")
-    from .spatial_join import bbox_cover_cells, with_point_cell
+    from .spatial_join import with_point_cell
 
-    cover = bbox_cover_cells(
-        seg.withColumn("minx", F.least("x1", "x2"))
-        .withColumn("miny", F.least("y1", "y2"))
-        .withColumn("maxx", F.greatest("x1", "x2"))
-        .withColumn("maxy", F.greatest("y1", "y2")),
-        pad=max_snap_dist,
-    ).drop("minx", "miny", "maxx", "maxy")
+    seg = segments.select("edge_id", "x1", "y1", "x2", "y2")
+    cover = _seg_cover(seg, max_snap_dist)
     pts = with_point_cell(points.select(id_col, "x", "y"))
-    d_r, t_r = _proj_cols()
+    d2, t = _proj_cols()
+    d_r, t_r = F.round(F.sqrt(d2), 6), F.round(t + F.lit(0.0), 6)
     w = Window.partitionBy(id_col).orderBy(
         F.col("snap_dist").asc(), F.col("edge_id").asc()
     )
@@ -118,29 +127,11 @@ def candidate_edges(
     s, every interior point's k=3 nearest segments are within s, so
     any bound > s is exact).  Candidates beyond the bound simply don't
     appear — the DP treats them as impossible states."""
-    seg = segments.select("edge_id", "x1", "y1", "x2", "y2")
-    from .spatial_join import bbox_cover_cells, with_point_cell
+    from .spatial_join import with_point_cell
 
-    cover = bbox_cover_cells(
-        seg.withColumn("minx", F.least("x1", "x2"))
-        .withColumn("miny", F.least("y1", "y2"))
-        .withColumn("maxx", F.greatest("x1", "x2"))
-        .withColumn("maxy", F.greatest("y1", "y2")),
-        pad=max_snap_dist,
-    ).drop("minx", "miny", "maxx", "maxy")
+    cover = _seg_cover(segments, max_snap_dist)
     pts = with_point_cell(points.select(id_col, "x", "y"))
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    len2 = dx * dx + dy * dy
-    traw = ((F.col("x") - F.col("x1")) * dx
-            + (F.col("y") - F.col("y1")) * dy) / len2
-    t = F.when(len2 == 0, F.lit(0.0)).otherwise(
-        F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
-    )
-    cx = F.col("x1") + t * dx
-    cy = F.col("y1") + t * dy
-    d2 = (F.col("x") - cx) * (F.col("x") - cx) \
-        + (F.col("y") - cy) * (F.col("y") - cy)
+    d2, _ = _proj_cols()
     w = Window.partitionBy(id_col).orderBy(
         F.col("emis").asc(), F.col("edge_id").asc()
     )

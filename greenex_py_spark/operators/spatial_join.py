@@ -14,8 +14,9 @@ with a scalable equi-join shape:
    vectorized ray-cast pandas UDF for true polygons) filters false
    positives.  Single-cell probes produce distinct pairs by
    construction (one probe cell × one cover row per cell) — the
-   whole join is shuffle-free after the broadcast; only
-   buffer-expanded (multi-cell) probes need a consumer-side dedup.
+   whole join is shuffle-free after the broadcast.  A distance bound
+   goes into the cover's ``pad`` (the probe stays one cell), so
+   distance-bounded pairings keep that property too.
 
 Skew: urban-core cells can exceed what AQE can split for a *single* key.
 ``salt_join`` fans each hot probe row to 1 salt and replicates cover rows
@@ -72,19 +73,21 @@ def cell_candidates(
     points: DataFrame,
     polys: DataFrame,
     pad: float = 0.0,
-    broadcast_cover: bool = True,
 ) -> DataFrame:
-    """points[... x,y] ⋈ polys[... bbox] on cell → candidate pairs.
+    """points[... x,y] ⋈ broadcast(polys[... bbox] + pad) on cell →
+    candidate pairs: every (point, poly) whose bbox, grown by ``pad``,
+    covers the point's cell.  The one join of every distance-bounded
+    pairing: the layer is the cover, the bound is ``pad``, and the
+    caller's exact predicate filters the result.
 
-    The returned frame may contain duplicate (point, poly) pairs when a
-    bbox spans multiple cells — consumers that need distinct pairs call
-    ``dropDuplicates``; min/max/agg consumers skip that shuffle.
+    Each point probes its home cell only, always derived from ``x, y``
+    (a ``cell`` column on ``points`` is replaced), and the cover has one
+    row per (poly, cell) — so each pair appears exactly once however
+    many cells a bbox spans, and no consumer needs a ``dropDuplicates``.
+    Columns of ``points`` must not collide with those of ``polys``;
+    callers project the probe to the columns they read.
     """
-    pts = points if "cell" in points.columns else with_point_cell(points)
-    cover = bbox_cover_cells(polys, pad=pad)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    return pts.join(cover, "cell")
+    return with_point_cell(points).join(F.broadcast(bbox_cover_cells(polys, pad=pad)), "cell")
 
 
 def point_in_rect_join(
@@ -92,7 +95,6 @@ def point_in_rect_join(
     rects: DataFrame,
     point_key: str = "id",
     rect_key: str = "gs_id",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Exact point-in-rectangle join (cell prefilter + codegen bbox test).
 
@@ -102,10 +104,9 @@ def point_in_rect_join(
     table has exactly one row per (rect, cell), so every surviving
     (point, rect) pair joins exactly once — no dedup exchange needed.
     Precondition: ``point_key`` is unique per input row (P4 id
-    assignment guarantees it); buffer-expanded probes (which explode a
-    point to many cells) must dedup at the consumer.
+    assignment guarantees it).
     """
-    cand = cell_candidates(points, rects, pad=0.0, broadcast_cover=broadcast_cover)
+    cand = cell_candidates(points, rects)
     return cand.filter(
         (F.col("x") >= F.col("minx")) & (F.col("x") < F.col("maxx"))
         & (F.col("y") >= F.col("miny")) & (F.col("y") < F.col("maxy"))
@@ -152,7 +153,6 @@ def point_in_polygon_join(
     point_key: str = "id",
     poly_key: str = "gs_id",
     rings_col: str = "rings",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """General PiP join: cell prefilter → bbox codegen filter → exact
     ray-cast UDF.  ``polys`` needs bbox columns + ``rings_col``.
@@ -160,7 +160,7 @@ def point_in_polygon_join(
     Shuffle-free for the same reason as :func:`point_in_rect_join`:
     single-cell probes meet one cover row per (poly, cell), so pairs
     are born distinct."""
-    cand = cell_candidates(points, polys, pad=0.0, broadcast_cover=broadcast_cover)
+    cand = cell_candidates(points, polys)
     cand = cand.filter(
         (F.col("x") >= F.col("minx")) & (F.col("x") <= F.col("maxx"))
         & (F.col("y") >= F.col("miny")) & (F.col("y") <= F.col("maxy"))

@@ -1295,10 +1295,8 @@ def colocation_quotient(
         F.col("x").alias("bx"), F.col("y").alias("by"),
     )
     cover = bbox_cover_cells(
-        b.withColumn("minx", F.col("bx")).withColumn("miny", F.col("by"))
-        .withColumn("maxx", F.col("bx")).withColumn("maxy", F.col("by")),
-        pad=nn_bound,
-    ).drop("minx", "miny", "maxx", "maxy")
+        b, pad=nn_bound, minx="bx", miny="by", maxx="bx", maxy="by"
+    )
     a = with_point_cell(p)
     d2 = (F.col("bx") - F.col("x")) * (F.col("bx") - F.col("x")) + (
         F.col("by") - F.col("y")
@@ -1376,10 +1374,8 @@ def clark_evans(
         F.col("x").alias("bx"), F.col("y").alias("by"),
     )
     cover = bbox_cover_cells(
-        b.withColumn("minx", F.col("bx")).withColumn("miny", F.col("by"))
-        .withColumn("maxx", F.col("bx")).withColumn("maxy", F.col("by")),
-        pad=nn_bound,
-    ).drop("minx", "miny", "maxx", "maxy")
+        b, pad=nn_bound, minx="bx", miny="by", maxx="bx", maxy="by"
+    )
     a = with_point_cell(p)
     d2 = (F.col("bx") - F.col("x")) * (F.col("bx") - F.col("x")) + (
         F.col("by") - F.col("y")

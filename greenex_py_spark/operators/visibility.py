@@ -18,10 +18,10 @@ Re-expresses ``get_viewshed_GVI`` (/root/reference/GreenExp/visibility.py:
 
 Streetview GVI (visibility.py:296-437) reduces to its in-scope core:
 sample points on the road network every N meters (G6 *step* scheme),
-dedup, PiP join against PoI buffers (J1), per-PoI mean/count over an
-externally-supplied per-point GVI table (A6 — Mapillary download and
-Mask2Former segmentation are external stages; see functions/multimodal
-for the stubbed decode plumbing).
+dedup, a cell join of the images against PoI buffers (J1), per-PoI
+mean/count over an externally-supplied per-point GVI table (A6 —
+Mapillary download and Mask2Former segmentation are external stages;
+see functions/multimodal for the stubbed decode plumbing).
 
 Raster convention: row r = floor((y - Y0)/res) (south-up). The kernel is
 row-flip symmetric, so results match the reference's north-up outputs on
@@ -309,19 +309,27 @@ def streetview_gvi_aggregate(
     id_col: str = "id",
 ) -> DataFrame:
     """[id, GVI, nr_of_points] — A6 aggregation (visibility.py:1040-1052):
-    per-point GVI table (external segmentation output) PiP-joined to PoI
+    per-point GVI table (external segmentation output) joined to PoI
     circular buffers; pandas groupby mean/count semantics (NaN GVI rows
-    excluded from BOTH mean and count).  Only ``x, y, GVI`` of the image
-    table are read, so an image-side ``id`` column cannot clash with the
-    PoI id."""
-    pts = gvi_points.select("x", "y", "GVI").filter(F.col("GVI").isNotNull())
-    b = buffers.select(
-        F.col(id_col).alias("id"), F.col("x").alias("bx"), F.col("y").alias("by")
+    excluded from BOTH mean and count).
+
+    Pairs come from the cell join: each image is a point bbox, the
+    broadcast cover padded by ``buffer_dist``; each PoI probes its home
+    cell, and the exact ``d² <= buffer_dist²`` test filters — so a PoI
+    meets only the images of its neighbourhood, each exactly once.
+    Only ``id, x, y`` of the PoIs and ``x, y, GVI`` of the image table
+    are read, so no other column of either side can clash."""
+    from .spatial_join import cell_candidates
+
+    imgs = gvi_points.filter(F.col("GVI").isNotNull()).select(
+        F.col("x").alias("minx"), F.col("y").alias("miny"),
+        F.col("x").alias("maxx"), F.col("y").alias("maxy"), "GVI",
     )
-    hit = (F.col("x") - F.col("bx")) ** 2 + (F.col("y") - F.col("by")) ** 2 <= F.lit(
+    b = buffers.select(F.col(id_col).alias("id"), "x", "y")
+    hit = (F.col("minx") - F.col("x")) ** 2 + (F.col("miny") - F.col("y")) ** 2 <= F.lit(
         float(buffer_dist) ** 2
     )
-    joined = pts.join(F.broadcast(b), hit)
+    joined = cell_candidates(b, imgs, pad=float(buffer_dist)).filter(hit)
     return (
         joined.groupBy("id")
         .agg(F.round(F.avg("GVI"), 3).alias("GVI"), F.count("GVI").alias("nr_of_points"))

@@ -322,7 +322,6 @@ def cover_percentage_square(
     radius: float,
     id_col: str = "id",
     out_col: str = "greenspace_cover",
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """[id, <out_col>] — % of a square buffer (side 2r) covered by
     greenspace rectangles (A3, codegen-only variant).
@@ -333,8 +332,7 @@ def cover_percentage_square(
     """
     from .spatial_join import cell_candidates
 
-    cand = cell_candidates(points.select(id_col, "x", "y"), greens,
-                           pad=float(radius), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points.select(id_col, "x", "y"), greens, pad=float(radius))
     ow = F.greatest(F.lit(0.0), F.least(F.col("maxx"), F.col("x") + radius)
                     - F.greatest(F.col("minx"), F.col("x") - radius))
     oh = F.greatest(F.lit(0.0), F.least(F.col("maxy"), F.col("y") + radius)
@@ -366,7 +364,6 @@ def cover_percentage_circle32(
     radius: float,
     id_col: str = "id",
     out_col: str = "canopy_cover",
-    broadcast_greens: bool = True,
 ) -> DataFrame:
     """Reference-exact variant: 32-segment circle buffer (shapely
     ``quad_segs=8``) ∩ arbitrary polygons via the Sutherland–Hodgman
@@ -380,8 +377,7 @@ def cover_percentage_circle32(
     from ..geo.kernels import circle_polygon, clip_area, polygon_area
     from .spatial_join import cell_candidates
 
-    cand = cell_candidates(points.select(id_col, "x", "y"), greens_rings,
-                           pad=float(radius), broadcast_cover=broadcast_greens)
+    cand = cell_candidates(points.select(id_col, "x", "y"), greens_rings, pad=float(radius))
     cand = cand.dropDuplicates([id_col, "gs_id"])
 
     @F.pandas_udf(T.DoubleType())

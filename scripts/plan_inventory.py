@@ -10,6 +10,10 @@ plan (what Catalyst actually chose) and counts the operators that decide
 - broadcast exchanges / BroadcastHashJoin (build sides shipped to every
   executor, no shuffle of the probe side)
 - SortMergeJoin / ShuffledHashJoin (the shuffling join strategies)
+- nested-loop joins (BroadcastNestedLoopJoin / CartesianProduct) —
+  every probe row meets every build row; distance-bounded pairings go
+  through the cell-candidate join instead, so a nonzero count should
+  only be a total-fallback tier over missed rows
 - Arrow stages (MapInPandas / FlatMapGroupsInPandas /
   FlatMapCoGroupsInPandas / ArrowEvalPython) — the vectorized Python
   escape hatches
@@ -45,6 +49,7 @@ MARKERS = {
     "bhj": r"\bBroadcastHashJoin\b",
     "smj": r"\bSortMergeJoin\b",
     "shj": r"\bShuffledHashJoin\b",
+    "nlj": r"\b(BroadcastNestedLoopJoin|CartesianProduct)\b",
     "arrow": r"\b(MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|ArrowEvalPython(UDTF)?|MapInArrow|PythonMapInArrow|ArrowEvalPythonUDTF)\b",
     "rowpy": r"\bBatchEvalPython\b",
     "codegen": None,  # counted as distinct *(n) codegen-stage ids below
@@ -95,19 +100,19 @@ def main() -> None:
         "decide scale behavior.  `rowPython` is the row-at-a-time Python UDF",
         "count; the input_hint mandates it stays **0** on every query.",
         "",
-        "| query | shuffles | broadcast joins | sort-merge joins | Arrow stages | rowPython | codegen spans | eager pre-work |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | broadcast joins | sort-merge joins | nested-loop joins | Arrow stages | rowPython | codegen spans | eager pre-work |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     worst_rowpy = 0
     for name, note, c, (ej, es) in rows:
         eager = f"{ej} jobs / {es} shuffles" if (ej or es) else "—"
         if c is None:
-            lines.append(f"| {name} | {note} |||||| {eager} |")
+            lines.append(f"| {name} | {note} ||||||| {eager} |")
             continue
         worst_rowpy = max(worst_rowpy, c["rowpy"])
         lines.append(
             f"| {name} | {c['shuffles']} | {c['bhj']} | {c['smj'] + c['shj']} "
-            f"| {c['arrow']} | {c['rowpy']} | {c['codegen']} | {eager} |"
+            f"| {c['nlj']} | {c['arrow']} | {c['rowpy']} | {c['codegen']} | {eager} |"
         )
     lines += [
         "",
@@ -118,6 +123,9 @@ def main() -> None:
         "join — the probe side streams map-side only.  Iterative operators",
         "(dissolve CC, Dijkstra) intentionally shuffle per round; dedup/text",
         "queries shuffle once per groupBy as partial-aggregated combines.",
+        "`nested-loop joins` counts BroadcastNestedLoopJoin + CartesianProduct:",
+        "in the accessibility and streetview families the only one left is",
+        "nearest_node's total-fallback tier over missed points (network rows).",
         "Codegen spans print 0 for AQE-wrapped plans (AdaptiveSparkPlan",
         "fuses stages at runtime, after this static capture); the",
         "exchange/join/Arrow counts are static and exact.  `eager pre-work`",

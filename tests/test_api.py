@@ -101,6 +101,77 @@ def test_accessibility_output_contract(spark, pois):
     assert (pdf.distance_to_greenspace <= 300.0).all()
 
 
+def test_poi_columns_named_like_join_internals(spark, pois):
+    """PoI columns called ``cell``, ``cx`` or ``minx`` (names the cell
+    join uses on either side) change neither the access nor the
+    streetview output: the probe is always projected to (id, x, y) and
+    its cell derived from x, y."""
+    greens = city.greenspace_df(spark)
+    g = greens.filter(F.col("area") >= 400).orderBy("gs_id").first()
+    # 50 m east and north of a park centroid: 71 m after rounding
+    near = spark.createDataFrame(
+        pd.DataFrame({"url": ["p"], "x": [g.cx + 50.0], "y": [g.cy + 50.0]})
+    )
+    plain = pois.unionByName(near)
+    odd = (
+        plain.withColumn("cell", F.lit(0).cast("long"))
+        .withColumn("cx", F.lit(-1.0))
+        .withColumn("minx", F.lit(-1.0))
+    )
+    images = spark.createDataFrame(
+        pd.DataFrame({"x": [g.cx, city.X0 + 3000.0], "y": [g.cy, city.Y0 + 3100.0],
+                      "GVI": [0.25, 0.5]})
+    )
+
+    def outputs(p):
+        acc = api.get_shortest_distance_greenspace(
+            p, greens, target_dist=300, min_greenspace_area=400
+        ).select("url", "greenspace_within_300m", "distance_to_greenspace")
+        sv = api.get_streetview_GVI(p, images, buffer_dist=150).select(
+            "url", "GVI", "nr_of_points"
+        )
+        return (acc.toPandas().sort_values("url").reset_index(drop=True),
+                sv.toPandas().sort_values("url").reset_index(drop=True))
+
+    acc_plain, sv_plain = outputs(plain)
+    acc_odd, sv_odd = outputs(odd)
+    pd.testing.assert_frame_equal(acc_plain, acc_odd)
+    pd.testing.assert_frame_equal(sv_plain, sv_odd)
+    row = acc_odd[acc_odd.url == "p"].iloc[0]
+    assert bool(row.greenspace_within_300m) and row.distance_to_greenspace <= 71.0
+    assert sv_odd[sv_odd.url == "p"].iloc[0].nr_of_points == 1
+
+
+def _nested_loop_joins(df) -> int:
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\b(BroadcastNestedLoopJoin|CartesianProduct)\b", plan))
+
+
+def test_distance_bounded_pairings_avoid_nested_loop_joins(spark, pois):
+    """Every PoI pairing of the access and streetview calls is the cell
+    join; the network variants keep exactly one nested-loop join, the
+    total-fallback tier of nearest_node over points no ring reached."""
+    greens = city.greenspace_df(spark)
+    nodes, edges = fx.network_dfs(spark)
+    images = spark.createDataFrame(
+        pd.DataFrame({"x": [city.X0 + 3000.0], "y": [city.Y0 + 3000.0], "GVI": [0.4]})
+    )
+    assert _nested_loop_joins(api.get_streetview_GVI(pois, images, buffer_dist=150)) == 0
+    assert _nested_loop_joins(api.get_shortest_distance_greenspace(
+        pois, greens, target_dist=300, min_greenspace_area=400)) == 0
+    for distance_type, destination in (
+        ("network", "centroids"), ("network", "entrance"), ("euclidean", "entrance"),
+    ):
+        df = api.get_shortest_distance_greenspace(
+            pois, greens, target_dist=300, distance_type=distance_type,
+            destination=destination, min_greenspace_area=400,
+            network_nodes=nodes, network_edges=edges,
+        )
+        assert _nested_loop_joins(df) == 1, (distance_type, destination)
+
+
 def test_canopy_and_greenspace_pct(spark, pois):
     rings = fx.greenspace_rings_df(spark)
     out = api.get_canopy_percentage(pois, rings, buffer_type="euclidean", buffer_dist=250)
@@ -125,17 +196,21 @@ def test_viewshed_and_streetview_api(spark, pois):
                                    viewing_dist=250, sample_dist=50)
     a = agg.toPandas()
     assert {"GVI", "nr_of_points"} <= set(a.columns) and a.GVI.notna().all()
+    # PoI "a" sits on a 100 m cell corner; the third image lies exactly
+    # buffer_dist west of it, two cell borders away, where the cover's
+    # pad ends exactly at the PoI's home cell
     gvi_pts = spark.createDataFrame(
-        pd.DataFrame({"x": [city.X0 + 3000.0, city.X0 + 3050.0],
-                      "y": [city.Y0 + 3000.0, city.Y0 + 3010.0],
-                      "GVI": [0.4, None]})
+        pd.DataFrame({"x": [city.X0 + 3000.0, city.X0 + 3050.0, city.X0 + 2850.0],
+                      "y": [city.Y0 + 3000.0, city.Y0 + 3010.0, city.Y0 + 3000.0],
+                      "GVI": [0.4, None, 0.8]})
     )
     # the reference's per-image tables carry their own id column
     with_id = gvi_pts.withColumn("id", F.lit(7).cast("long")).select("id", "x", "y", "GVI")
     for images in (gvi_pts, with_id):
         sv = api.get_streetview_GVI(pois, images, buffer_dist=150).toPandas()
         row = sv[sv.url == "a"].iloc[0]
-        assert row.GVI == 0.4 and row.nr_of_points == 1  # null GVI excluded from both
+        # null GVI excluded from both; the image at d == buffer_dist counts
+        assert row.GVI == 0.6 and row.nr_of_points == 2
 
 
 def test_street_edges_as_pois(spark):

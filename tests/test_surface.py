@@ -25,9 +25,16 @@ def test_nearest_k_matches_brute_force(spark):
         want = set(np.argsort(d, kind="stable")[:3])
         have = set(got[got.id == pid].gs_id)
         assert have == want, pid
-    # distance-bounded variant: every returned pair respects the bound
+    # distance-bounded variant: the brute-force top-3 among the targets
+    # within 200 m (fewer, or none, where fewer are that close)
     bounded = nearest_k(pts, tgt, k=3, max_dist=200.0).toPandas()
     assert (bounded.nn_dist <= 200.0).all()
+    for pid in range(20):
+        d = np.hypot(tx - px[pid], ty - py[pid])
+        want = [i for i in np.argsort(d, kind="stable")[:3] if d[i] <= 200.0]
+        have = bounded[bounded.id == pid].sort_values("nn_rank")
+        assert list(have.gs_id) == want, pid
+        np.testing.assert_allclose(have.nn_dist, d[want], rtol=1e-12)
 
 
 def test_nearest_k_crossjoin_cap_boundary(spark, monkeypatch):
