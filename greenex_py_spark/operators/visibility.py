@@ -7,12 +7,14 @@ Re-expresses ``get_viewshed_GVI`` (/root/reference/GreenExp/visibility.py:
    per-edge interpolation (G6 *linspace* scheme: ``num=int(len/d)+1``,
    or per-edge centroid when shorter than sample_dist —
    visibility.py:579-587) → explode (T3);
-2. **halo-join GVI** — each sample point's home raster tile + the 3×3
-   tile halo are cogrouped (tiles replicated ×9 JVM-side — the standard
-   halo-exchange shape, bounded blow-up, no global shuffle of pixels);
-   the Arrow kernel assembles per-point (2R+1)² windows from the mosaic
-   and runs the vectorized viewshed (geo/raster.py) — reference bug
-   replicated by default;
+2. **halo-join GVI** — each home raster tile that holds a sample point
+   is cogrouped with its 3×3 tile halo (the standard halo-exchange
+   shape, no global shuffle of pixels): a broadcast equi-join sends a
+   tile only to the homes that need it, and a tile north or south of
+   its home only as the R rows the home's windows read, cropped in the
+   JVM before the Arrow boundary; the Arrow kernel assembles per-point
+   (2R+1)² windows from the mosaic and runs the vectorized viewshed
+   (geo/raster.py) — reference bug replicated by default;
 3. **A5 aggregation** — ``groupBy(id).agg(round(avg(GVI),3), count)``;
    NaN semantics follow np.mean (any NaN point → NaN PoI GVI).
 
@@ -164,7 +166,6 @@ def viewshed_gvi_points(
     target_height: float = 0.0,
     replicate_bug: bool = True,
     grid: GridSpec | None = None,
-    prune_empty_tiles: bool = False,
 ) -> DataFrame:
     """[id, sp_id, x, y, GVI] — per-sample-point GVI.
 
@@ -172,45 +173,69 @@ def viewshed_gvi_points(
     from the tile table metadata (GridSpec.from_tiles — two tiny agg
     jobs; gate queries pass it explicitly).
 
-    ``prune_empty_tiles=True`` semi-joins the halo on the tile groups
-    that actually hold sample points — pays one extra pass over the
-    sample lineage, wins when PoIs cover a sparse fraction of the
-    raster (planet-scale), loses on dense fixtures (measured 2×) —
-    hence opt-in.
-
     ``tiles``: union of dsm/dtm/green tile tables (same schema, distinct
-    ``layer`` values).  Tiles are exploded to their 3×3 halo neighbours
-    (codegen) and cogrouped with sample points on the home tile id; the
-    Arrow kernel assembles the mosaic once per group and computes every
-    point vectorized.
+    ``layer`` values).  The home-tiled sample points are materialized
+    once (``localCheckpoint``); each home tile that holds a sample point
+    gets its ≤ 9-tile halo through a broadcast equi-join, and a halo
+    tile north or south of its home is cropped in the JVM to the
+    ``R = viewing_dist // res`` rows the home's windows read.  The
+    halo is cogrouped with the sample points on the home tile id, and
+    the Arrow kernel assembles the mosaic once per group and computes
+    every point vectorized.
+
+    Precondition: ``R <= tile_px``, so every window fits the 3×3 halo;
+    a larger ``R`` raises ``ValueError``.
     """
+    from .zonal import _crop_rows
+
     grid = grid or GridSpec.from_tiles(tiles)
     tile_px, res = grid.tile_px, grid.res
     ox, oy = grid.origin_x, grid.origin_y
     npx_x, npx_y = grid.npx_x, grid.npx_y
     R = int(viewing_dist // res)
+    if R > tile_px:
+        raise ValueError(
+            f"viewing_dist={viewing_dist} at res={res} is a {R}-px window radius, "
+            f"more than tile_px={tile_px}: the 3x3 tile halo cannot hold it; "
+            f"use tiles of at least {R} px or a shorter viewing_dist"
+        )
 
+    # one small row per sample point, read by the cogroup and the halo's
+    # home set alike, so the sampling kernel runs once
     pts = sampled.withColumn(
         "htx", F.floor((F.col("x") - ox) / (tile_px * res)).cast("int")
     ).withColumn(
         "hty", F.floor((F.col("y") - oy) / (tile_px * res)).cast("int")
-    )
+    ).localCheckpoint()
 
-    halo = (
-        tiles.withColumn("_dx", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("htx", F.col("tx") + F.col("_dx"))
-        .withColumn("hty", F.col("ty") + F.col("_dy"))
+    # (tile, offset) pairs of the ≤ 9-tile halo of each home that holds
+    # a sample point: the tile at (htx - _dx, hty - _dy)
+    offsets = F.explode(F.sequence(F.lit(-1), F.lit(1)))
+    need = (
+        pts.select("htx", "hty").distinct()
         .filter(
             (F.col("htx") >= 0) & (F.col("htx") < grid.n_tiles_x)
             & (F.col("hty") >= 0) & (F.col("hty") < grid.n_tiles_y)
         )
-        .drop("_dx", "_dy")
-    )
-    if prune_empty_tiles:
-        halo = halo.join(
-            F.broadcast(pts.select("htx", "hty").distinct()), ["htx", "hty"], "leftsemi"
+        .withColumn("_dx", offsets)
+        .withColumn("_dy", offsets)
+        .select(
+            (F.col("htx") - F.col("_dx")).alias("tx"),
+            (F.col("hty") - F.col("_dy")).alias("ty"),
+            "_dx", "_dy",
         )
+    )
+    halo = tiles.join(F.broadcast(need), ["tx", "ty"]).withColumns(
+        {"htx": F.col("tx") + F.col("_dx"), "hty": F.col("ty") + F.col("_dy")}
+    )
+    # windows reach R rows past their home tile: the top rows of the
+    # tile to the south (_dy = 1), the bottom rows of the one to the north
+    strip = F.least(F.lit(R), F.col("h"))
+    halo = _crop_rows(
+        halo,
+        F.when(F.col("_dy") == 1, F.col("h") - strip).otherwise(F.lit(0)),
+        F.when(F.col("_dy") == 0, F.col("h")).otherwise(strip),
+    ).drop("_dx", "_dy")
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         cols = ["id", "sp_id", "x", "y", "GVI"]
@@ -229,7 +254,7 @@ def viewshed_gvi_points(
                 a = np.frombuffer(buf, dtype=np.float32).astype(np.float64).reshape(t.h, t.w)
             else:
                 a = np.asarray(buf, dtype=np.float64).reshape(t.h, t.w)
-            r0 = t.ty * tile_px - base_iy
+            r0 = t.ty * tile_px + t.row0 - base_iy
             c0 = t.tx * tile_px - base_ix
             mos[t.layer][r0 : r0 + t.h, c0 : c0 + t.w] = a
         ixc = ((left["x"].to_numpy(np.float64) - ox) // res).astype(np.int64)

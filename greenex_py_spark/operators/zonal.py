@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..geo.grid import GridSpec
 
@@ -50,6 +51,22 @@ def _tile_span(df: DataFrame, lo_x, lo_y, hi_x, hi_y, grid: GridSpec) -> DataFra
         df.withColumn("ty", F.explode(span(lo_y, hi_y, grid.origin_y, grid.n_tiles_y)))
         .withColumn("tx", F.explode(span(lo_x, hi_x, grid.origin_x, grid.n_tiles_x)))
     )
+
+
+def _crop_rows(tiles: DataFrame, row0, nrows) -> DataFrame:
+    """``tiles`` cut in the JVM, before any Arrow stage, to the ``nrows``
+    pixel rows that start at tile row ``row0``: ``px`` holds only those
+    rows, ``h`` becomes ``nrows`` and a ``row0`` column is added, so a
+    kernel places the strip at tile row ``ty * tile_px + row0``.  Columns
+    stay whole: a strided column slice would need interpreted array
+    lambdas.  Binary ``px`` holds float32 pixels, as the surface tiles
+    do."""
+    w = F.col("w")
+    if isinstance(tiles.schema["px"].dataType, T.BinaryType):
+        px = F.substring("px", row0 * w * 4 + 1, nrows * w * 4)
+    else:
+        px = F.slice("px", row0 * w + 1, nrows * w)
+    return tiles.withColumns({"px": px, "h": nrows.cast("int"), "row0": row0.cast("int")})
 
 
 def _circle_windows(left: pd.DataFrame, right: pd.DataFrame, radius: float):
@@ -327,8 +344,9 @@ def cover_percentage_square(
     greenspace rectangles (A3, codegen-only variant).
 
     Exact when rectangles don't overlap (the dissolve operator guarantees
-    that upstream for real layers).  ``"<v>%"`` string, round 2 —
-    availability.py:764,997 output contract.
+    that upstream for real layers).  Every candidate pair counts once, so
+    disjoint parts of one park that share a ``gs_id`` all count.
+    ``"<v>%"`` string, round 2 — availability.py:764,997 output contract.
     """
     from .spatial_join import cell_candidates
 
@@ -339,7 +357,6 @@ def cover_percentage_square(
                     - F.greatest(F.col("miny"), F.col("y") - radius))
     overlaps = (
         cand.withColumn("ov", ow * oh)
-        .dropDuplicates([id_col, "gs_id"])
         .groupBy(id_col)
         .agg(F.sum("ov").alias("ov_sum"))
     )
@@ -372,13 +389,10 @@ def cover_percentage_circle32(
 
     ``greens_rings``: [gs_id, minx..maxy, rings array<array<double>>].
     """
-    from pyspark.sql import types as T
-
     from ..geo.kernels import circle_polygon, clip_area, polygon_area
     from .spatial_join import cell_candidates
 
     cand = cell_candidates(points.select(id_col, "x", "y"), greens_rings, pad=float(radius))
-    cand = cand.dropDuplicates([id_col, "gs_id"])
 
     @F.pandas_udf(T.DoubleType())
     def clip_area_udf(x: pd.Series, y: pd.Series, rings: pd.Series) -> pd.Series:
@@ -513,8 +527,12 @@ def zonal_stats_aoi(
     """Masked zonal statistics over arbitrary AoIs.
 
     Plan: AoI bbox → tile-span explode (codegen) → equi-join to tiles →
-    ``groupBy(id)`` Arrow kernel assembles the AoI-window mosaic, builds
-    the mask (circle / capsule+fill / ray-cast), emits the stat.
+    each (AoI, tile) row ``slice``d in the JVM to the rows of the AoI
+    window (:func:`_crop_rows`) → ``groupBy(id)`` Arrow kernel assembles
+    the AoI-window mosaic, builds the mask (circle / capsule+fill /
+    ray-cast), emits the stat.  The mosaic only ever fills the window's
+    rows ``[iy0, iy1]``, so the crop is exact for every AoI kind; a
+    tile left with 0 rows copies nothing but keeps its AoI's group.
 
     Only ``iso`` AoIs (isochrones, street edges) need the per-AoI
     mosaic: the hole fill decides a pixel by whether it connects to the
@@ -530,6 +548,12 @@ def zonal_stats_aoi(
     joined = _tile_span(
         aoi, F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), grid
     ).join(tiles, ["tx", "ty"])
+    # only the tile's rows inside the kernel's window [iy0, iy1] (same
+    # floor expressions) cross the Arrow boundary, as tile-local rows
+    gy0 = F.col("ty") * tile_px
+    lo = F.greatest(F.floor((F.col("miny") - oy) / res) - gy0, F.lit(0))
+    hi = F.least(F.floor((F.col("maxy") - oy) / res) - gy0, F.col("h") - 1)
+    joined = _crop_rows(joined, lo, F.greatest(hi - lo + 1, F.lit(0)))
 
     npx_x, npx_y = grid.npx_x, grid.npx_y
 
@@ -545,7 +569,7 @@ def zonal_stats_aoi(
         for t in kdf.itertuples(index=False):
             arr = np.asarray(t.px, dtype=np.float64).reshape(t.h, t.w)
             gx0 = int(t.tx) * tile_px
-            gy0 = int(t.ty) * tile_px
+            gy0 = int(t.ty) * tile_px + int(t.row0)
             sx0 = max(ix0, gx0); sx1 = min(ix1, gx0 + t.w - 1)
             sy0 = max(iy0, gy0); sy1 = min(iy1, gy0 + t.h - 1)
             if sx1 < sx0 or sy1 < sy0:

@@ -69,7 +69,9 @@ def check_sf(spark, m, sf: str, names: list[str]) -> list[str]:
     failing names."""
     import duckdb
 
-    con = duckdb.connect()
+    # DuckDB's default limit is 80 % of RAM, beside a running Spark JVM:
+    # at sf0.1 q_adaptive_grid's oracle alone grew past 12 GB unbounded
+    con = duckdb.connect(config={"memory_limit": "3GB"})
     for f in glob.glob(f"{sf}/*.parquet"):
         con.execute(
             f"CREATE VIEW {os.path.basename(f)[:-8]} AS "

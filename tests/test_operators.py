@@ -87,6 +87,28 @@ def test_accessibility_clamp_quirks(spark):
     assert out.loc[3, "distance_to_greenspace"] == 200.0
 
 
+def test_cover_percentage_counts_every_part_of_a_park(spark):
+    """Two disjoint parts of one park share a gs_id: both parts count, in
+    the square-buffer and the 32-gon-buffer cover alike."""
+    from greenex_py_spark.geo.kernels import circle_polygon, polygon_area
+    from greenex_py_spark.operators.zonal import cover_percentage_circle32, cover_percentage_square
+
+    pts = spark.createDataFrame(pd.DataFrame({"id": [1], "x": [101000.0], "y": [451000.0]}))
+    # two 20 m squares of park 7, both well inside the 100 m buffers
+    boxes = [(100960.0, 450960.0, 100980.0, 450980.0), (101020.0, 451020.0, 101040.0, 451040.0)]
+    greens = spark.createDataFrame(pd.DataFrame({
+        "gs_id": [7, 7],
+        "minx": [b[0] for b in boxes], "miny": [b[1] for b in boxes],
+        "maxx": [b[2] for b in boxes], "maxy": [b[3] for b in boxes],
+        "rings": [[[b[0], b[1], b[2], b[1], b[2], b[3], b[0], b[3], b[0], b[1]]] for b in boxes],
+    }))
+    square = cover_percentage_square(pts, greens.drop("rings"), radius=100.0).toPandas()
+    assert square.greenspace_cover.tolist() == ["2.0%"]  # 2 × 400 m² of 40,000 m²
+    circle = cover_percentage_circle32(pts, greens, radius=100.0).toPandas()
+    want = round(800.0 / polygon_area([circle_polygon(0.0, 0.0, 100.0)]) * 100.0, 2)
+    assert circle.canopy_cover.tolist() == [f"{want}%"]
+
+
 def test_landcover_percentages_sum_to_100(spark, sf_dir):
     from greenex_py_spark.driver_queries import q_landcover_pct
 

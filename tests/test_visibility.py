@@ -114,6 +114,14 @@ def test_bug_flag_changes_result():
     assert (w_bug != w_fix).any()  # effective observer height 5.0 vs 1.7
 
 
+def _surface_tiles(spark, tile_px):
+    return (
+        fx.surface_tiles_df(spark, "dsm", tile_px)
+        .unionByName(fx.surface_tiles_df(spark, "dtm", tile_px))
+        .unionByName(fx.surface_tiles_df(spark, "green", tile_px))
+    )
+
+
 @pytest.mark.slow
 def test_distributed_pipeline_matches_oracle(spark):
     """3 interior PoIs through the full Spark pipeline == in-process oracle."""
@@ -127,13 +135,9 @@ def test_distributed_pipeline_matches_oracle(spark):
         )
     )
     _, edges = fx.network_dfs(spark)
-    tiles = (
-        fx.surface_tiles_df(spark, "dsm")
-        .unionByName(fx.surface_tiles_df(spark, "dtm"))
-        .unionByName(fx.surface_tiles_df(spark, "green"))
-    )
     agg, per_point = viewshed_gvi(
-        pois, edges, tiles, buffer_dist=100.0, viewing_dist=250.0, sample_dist=50.0
+        pois, edges, _surface_tiles(spark, 256), buffer_dist=100.0, viewing_dist=250.0,
+        sample_dist=50.0,
     )
     pp = per_point.toPandas().sort_values(["id", "sp_id"]).reset_index(drop=True)
     assert len(pp) > 0 and pp.GVI.notna().all()
@@ -180,3 +184,53 @@ def test_batch_kernel_bit_identical():
             assert np.isnan(batch[k])
         else:
             assert batch[k] == want, (k, batch[k], want)
+
+
+@pytest.mark.slow
+def test_halo_crop_is_tile_size_invariant(spark):
+    """Per-point GVI is the same over 64-px and 256-px surface tiles.
+
+    At 64 px (320 m) the halo crops each neighbour tile north or south of
+    a home to its R = 50 rows, and the last tile row holds only
+    2000 - 31·64 = 16 < R rows.  PoI 1 sits on the corner of four 64-px
+    tiles; PoI 2's sample points near y = 9700 m read rows of that short
+    northern tile row; PoI 3 is interior."""
+    from greenex_py_spark.operators.visibility import viewshed_gvi
+
+    pois = spark.createDataFrame(
+        pd.DataFrame(
+            {"id": [1, 2, 3],
+             "x": [city.X0 + 3200.0, city.X0 + 5000.0, city.X0 + 6100.0],
+             "y": [city.Y0 + 3200.0, city.Y0 + 9700.0, city.Y0 + 4500.0]}
+        )
+    )
+    _, edges = fx.network_dfs(spark)
+    got = {}
+    for tile_px in (64, 256):
+        _, per_point = viewshed_gvi(
+            pois, edges, _surface_tiles(spark, tile_px), buffer_dist=100.0,
+            viewing_dist=250.0, sample_dist=50.0, grid=fx.surface_grid(tile_px),
+        )
+        got[tile_px] = (
+            per_point.toPandas().sort_values(["id", "sp_id"]).reset_index(drop=True)
+        )
+    pp = got[256]
+    assert set(pp.id) == {1, 2, 3} and pp.GVI.notna().sum() > 0
+    # PoI 2 has points whose window reads the 16-row tile row (iy + R >= 1984)
+    iy = ((pp.y - city.Y0) // fx.DSM_RES).astype(int)
+    assert ((pp.id == 2) & pp.GVI.notna() & (iy + 50 >= 1984)).any()
+    pd.testing.assert_frame_equal(got[64], pp)
+
+
+def test_viewing_dist_beyond_tile_halo_raises(spark):
+    """R = viewing_dist // res = 50 px cannot fit the 3×3 halo of 32-px
+    tiles: the call fails at plan time, naming the three quantities."""
+    from greenex_py_spark.operators.visibility import viewshed_gvi
+
+    pois = spark.createDataFrame(
+        pd.DataFrame({"id": [1], "x": [city.X0 + 3000.0], "y": [city.Y0 + 3000.0]})
+    )
+    _, edges = fx.network_dfs(spark)
+    with pytest.raises(ValueError, match=r"viewing_dist=250\.0.*res=5\.0.*tile_px=32"):
+        viewshed_gvi(pois, edges, _surface_tiles(spark, 32), viewing_dist=250.0,
+                     grid=fx.surface_grid(32))
