@@ -4,9 +4,8 @@ BASELINE.json ``input_hint``: the engine's real input is an Iceberg table
 of Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``.  This
 module synthesizes that table at any row count, byte-stable for a given
 seed (LCG streams keyed by row id — no Python ``random``), and geocodes
-points *from the url* with a vectorized polynomial hash (no per-row
-Python; the char loop is over string *positions*, ≤64 Arrow-vectorized
-iterations per batch).
+points *from the url* with the JVM's ``xxhash64`` (pure codegen, no
+Python).
 
 The ``text`` column is the byte-identity invariant: it must survive the
 pipeline unchanged per url (verified in tests/test_text_invariant.py).
@@ -98,67 +97,8 @@ def documents(spark: SparkSession, n: int, seed: int = 42, partitions: int | Non
 
 
 # ---------------------------------------------------------------------------
-# url-hash geocoder (vectorized polynomial hash)
+# url-hash geocoder
 # ---------------------------------------------------------------------------
-
-
-_HASH_B = np.uint64(1099511628211)  # FNV prime as the position weight base
-
-
-def _bpow(n: int) -> np.ndarray:
-    p = np.empty(n, dtype=np.uint64)
-    p[0] = np.uint64(1)
-    with np.errstate(over="ignore"):
-        for i in range(1, n):
-            p[i] = p[i - 1] * _HASH_B  # uint64 wraps mod 2^64
-    return p
-
-
-_BPOW_CACHE = _bpow(256)
-
-
-def url_hash64(s: pd.Series) -> np.ndarray:
-    """Vectorized 64-bit position-weighted polynomial hash:
-    ``h = Σ_j byte_j · B^j  (mod 2^64)``, plus a final mix.
-
-    Single pass over the concatenated bytes (``np.add.reduceat``) — no
-    per-position loop, no per-row Python; ~10× faster than a Horner loop
-    and identical per-url determinism.
-    """
-    if len(s) == 0:
-        return np.empty(0, dtype=np.uint64)
-    bs = s.astype("object").str.encode("utf-8")
-    lens = bs.str.len().to_numpy(dtype=np.int64)
-    buf = np.frombuffer(b"".join(bs.tolist()), dtype=np.uint8).astype(np.uint64)
-    offs = np.zeros(len(bs), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    global _BPOW_CACHE
-    mx = int(lens.max())
-    if mx > len(_BPOW_CACHE):
-        _BPOW_CACHE = _bpow(mx + 64)
-    # position-within-string via reset-cumsum (np.repeat is ~10× slower)
-    pos = np.ones(len(buf), dtype=np.int64)
-    pos[0] = 0
-    pos[offs[1:]] = 1 - lens[:-1]
-    np.cumsum(pos, out=pos)
-    h = np.add.reduceat(buf * _BPOW_CACHE[pos], offs)
-    # length-mix so "ab"+"" and "a"+"b" style collisions differ, then avalanche
-    h = (h + lens.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
-    h ^= h >> np.uint64(33)
-    h = h * np.uint64(0xFF51AFD7ED558CCD)
-    h ^= h >> np.uint64(33)
-    return h
-
-
-def geocode_xy(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """hash → (x, y) in the synthetic city; 60% of points in the 1 km
-    urban core (skew fixture — FIXTURES.md §2.1)."""
-    fx = ((h % np.uint64(1_000_000)).astype(np.float64)) / 1e6
-    fy = (((h >> np.uint64(20)) % np.uint64(1_000_000)).astype(np.float64)) / 1e6
-    in_core = ((h >> np.uint64(45)) % np.uint64(10)) < 6
-    x = np.where(in_core, city.CORE_X0 + fx * city.CORE_EXTENT, city.X0 + fx * city.EXTENT)
-    y = np.where(in_core, city.CORE_Y0 + fy * city.CORE_EXTENT, city.Y0 + fy * city.EXTENT)
-    return x, y
 
 
 def geocode(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -167,8 +107,8 @@ def geocode(df: DataFrame, url_col: str = "url") -> DataFrame:
     The geocoder only needs a deterministic 64-bit url hash; Spark's
     JVM-side ``xxhash64`` keeps the whole stage inside WholeStageCodegen
     (an Arrow pandas-UDF hash was ~10× slower and memory-bandwidth bound
-    — measured in BENCH/notes; see url_hash64 for the NumPy mirror used
-    by in-process oracles)."""
+    — measured in BENCH/notes).  60% of points land in the 1 km urban
+    core (skew fixture — FIXTURES.md §2.1)."""
     h = F.xxhash64(F.col(url_col))
     fx = F.pmod(h, F.lit(1000000)).cast("double") / 1e6
     fy = F.pmod(F.shiftrightunsigned(h, 20), F.lit(1000000)).cast("double") / 1e6
@@ -180,24 +120,6 @@ def geocode(df: DataFrame, url_col: str = "url") -> DataFrame:
         "y",
         F.when(in_core, city.CORE_Y0 + fy * city.CORE_EXTENT).otherwise(city.Y0 + fy * city.EXTENT),
     )
-    gx = F.floor((F.col("x") - ORIGIN_X) / CELL_SIZE).cast("long")
-    gy = F.floor((F.col("y") - ORIGIN_Y) / CELL_SIZE).cast("long")
-    return out.withColumn("cell", gy * (1 << 20) + gx)
-
-
-def geocode_arrow(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Arrow pandas-UDF variant of :func:`geocode` (url_hash64-based).
-
-    Kept for parity testing of the vectorized-UDF path; the codegen
-    variant above is the production one."""
-
-    @F.pandas_udf(T.StructType([T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]))
-    def geo_udf(url: pd.Series) -> pd.DataFrame:
-        x, y = geocode_xy(url_hash64(url))
-        return pd.DataFrame({"x": x, "y": y})
-
-    out = df.withColumn("_xy", geo_udf(F.col(url_col)))
-    out = out.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
     gx = F.floor((F.col("x") - ORIGIN_X) / CELL_SIZE).cast("long")
     gy = F.floor((F.col("y") - ORIGIN_Y) / CELL_SIZE).cast("long")
     return out.withColumn("cell", gy * (1 << 20) + gx)

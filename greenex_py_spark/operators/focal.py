@@ -18,6 +18,18 @@ Plan shape: one ``mapInPandas`` emits core + strips (bounded explode,
 <= 9 parts per tile), one ``groupBy(tile).applyInPandas`` assembles
 and convolves — a single shuffle keyed by tile id, identical to the
 zonal join's co-partitioning, and per-task memory is one padded tile.
+
+One scaffold owns that plan: :func:`_halo_stats` runs ``_halo_parts``
+→ ``groupBy("dtx", "dty").applyInPandas`` → ``_assemble_canvas`` and
+calls the operator's STENCIL ``(canvas, mask, w, h, tx, ty) → {column:
+value}`` on the padded canvas (``mask`` = 1 on in-raster pixels), then
+adds ``tx, ty``.  So each halo operator below is only its stencil plus
+the Catalyst step after it; the stencils share the 3×3 window sum
+(:func:`_box3`), the interior mask (:func:`_interior`) and the Horn
+gradients (:func:`_horn`).  Every map-side raster tile kernel — here,
+in hydro, patches, threshold and zonal — reads its tiles through
+:func:`_quantized_tiles`, the one place ``px`` is unpacked and
+quantised.
 """
 
 from __future__ import annotations
@@ -33,11 +45,12 @@ from ..geo.grid import GridSpec
 
 __all__ = [
     "focal_tile_stats", "slope_tile_stats", "pyramid_tile_stats",
-    "hillshade_tile_stats", "flow_direction_counts",
+    "hillshade_constants", "hillshade_tile_stats", "flow_direction_counts",
     "aspect_octant_counts", "ruggedness_tile_stats", "euler_tile_stats",
     "edge_density_tile_stats", "majority_tile_counts",
-    "core_area_tile_stats",
-    "marching_squares_counts", "MS_SEGMENTS",
+    "curvature_class_counts", "core_area_tile_stats",
+    "cell_value_sums", "haar_energy_tile_stats", "focal_entropy_tile_stats",
+    "marching_squares_counts", "MS_SEGMENTS", "D8_DIRS",
     "octant_case_sql", "quantize_half_away",
 ]
 
@@ -52,6 +65,18 @@ def quantize_half_away(v: np.ndarray, quant: float) -> np.ndarray:
     SQL ``round`` (np.round would bank-round .5 to even)."""
     s = v * quant
     return (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
+
+
+def _quantized_tiles(pdf: pd.DataFrame, quant: float, flat: bool = False):
+    """(tile row, int64 pixels) for each row of one Arrow batch of a
+    tile table: the one place a map-side kernel unpacks ``px`` and
+    quantises it (:func:`quantize_half_away`).  Pixels come shaped
+    (h, w), or flat for a batch that carries ``px`` alone."""
+    for t in pdf.itertuples():
+        v = np.asarray(t.px, dtype=np.float64)
+        yield t, quantize_half_away(
+            v if flat else v.reshape(int(t.h), int(t.w)), quant
+        )
 
 
 def _halo_parts(tiles: DataFrame, grid: GridSpec, quant: float) -> DataFrame:
@@ -69,11 +94,8 @@ def _halo_parts(tiles: DataFrame, grid: GridSpec, quant: float) -> DataFrame:
     def emit_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                arr = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
+            for t, arr in _quantized_tiles(pdf, quant):
+                h, w = arr.shape
                 tx, ty = int(t.tx), int(t.ty)
                 gx0, gy0 = tx * tile_px, ty * tile_px
                 # core: the whole tile to itself
@@ -126,6 +148,63 @@ def _assemble_canvas(kdf: pd.DataFrame, grid: GridSpec):
     return tx, ty, canvas, mask, w, h
 
 
+def _halo_stats(
+    tiles: DataFrame, grid: GridSpec, quant: float, schema: str, stencil
+) -> DataFrame:
+    """The halo exchange of every focal operator: ``_halo_parts``, one
+    tile-keyed ``applyInPandas`` that assembles each padded canvas, and
+    ``stencil(canvas, mask, w, h, tx, ty)``.  The stencil returns its
+    output columns as a dict of scalars (one row per tile) or of
+    equal-length arrays (histogram rows); ``schema`` types them, and
+    the scaffold prepends ``tx, ty``."""
+
+    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
+        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+        cols = stencil(canvas, mask, w, h, tx, ty)
+        return pd.DataFrame(
+            {"tx": tx, "ty": ty,
+             **{k: np.atleast_1d(v) for k, v in cols.items()}}
+        )
+
+    parts = _halo_parts(tiles, grid, quant)
+    return parts.groupBy("dtx", "dty").applyInPandas(
+        assemble, schema=f"tx long, ty long, {schema}"
+    )
+
+
+def _box3(a: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Exact int64 sum of each pixel's 3×3 window of a padded canvas
+    (a bool canvas counts its True cells)."""
+    out = np.zeros((h, w), dtype=np.int64)
+    for dy in (0, 1, 2):
+        for dx in (0, 1, 2):
+            out += a[dy:dy + h, dx:dx + w]
+    return out
+
+
+def _interior(mask: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Pixels whose whole 3×3 window lies in the raster — after the
+    cross-tile halos, everything but the raster border."""
+    return _box3(mask, w, h) == 9
+
+
+def _horn(c: np.ndarray, w: int, h: int) -> tuple[np.ndarray, np.ndarray]:
+    """Horn's gradient numerators (nx, ny) of every pixel, exact int64:
+
+        nx = (z_ne + 2 z_e + z_se) − (z_nw + 2 z_w + z_sw)
+        ny = (z_sw + 2 z_s + z_se) − (z_nw + 2 z_n + z_ne)
+    """
+    nx = (
+        (c[0:h, 2:w + 2] + 2 * c[1:h + 1, 2:w + 2] + c[2:h + 2, 2:w + 2])
+        - (c[0:h, 0:w] + 2 * c[1:h + 1, 0:w] + c[2:h + 2, 0:w])
+    )
+    ny = (
+        (c[2:h + 2, 0:w] + 2 * c[2:h + 2, 1:w + 1] + c[2:h + 2, 2:w + 2])
+        - (c[0:h, 0:w] + 2 * c[0:h, 1:w + 1] + c[0:h, 2:w + 2])
+    )
+    return nx, ny
+
+
 def focal_tile_stats(
     tiles: DataFrame,
     grid: GridSpec,
@@ -144,32 +223,20 @@ def focal_tile_stats(
     chain the oracle runs.  Raster-sized results stay on the
     executors; only tile-count rows return.
     """
-    parts = _halo_parts(tiles, grid, quant)
+    def stencil(canvas, mask, w, h, tx, ty):
+        fsum = _box3(canvas, w, h)
+        return {
+            "n_px": int(h * w), "tot_focal": int(fsum.sum()),
+            "tot_cnt": int(_box3(mask, w, h).sum()),
+            "min_focal": int(fsum.min()), "max_focal": int(fsum.max()),
+        }
 
-    out_schema = (
-        "tx long, ty long, n_px long, tot_focal long, tot_cnt long, "
-        "min_focal long, max_focal long"
+    stats = _halo_stats(
+        tiles, grid, quant,
+        "n_px long, tot_focal long, tot_cnt long, min_focal long, "
+        "max_focal long",
+        stencil,
     )
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        fsum = np.zeros((h, w), dtype=np.int64)
-        fcnt = np.zeros((h, w), dtype=np.int64)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                fsum += canvas[dy:dy + h, dx:dx + w]
-                fcnt += mask[dy:dy + h, dx:dx + w]
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_px": [int(h * w)],
-                "tot_focal": [int(fsum.sum())],
-                "tot_cnt": [int(fcnt.sum())],
-                "min_focal": [int(fsum.min())],
-                "max_focal": [int(fsum.max())],
-            }
-        )
-
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
     # the ONE floating-point step happens in Catalyst (not NumPy) so the
     # division + round-6 chain is the same engine pair the whole gate uses
     return stats.select(
@@ -209,38 +276,21 @@ def slope_tile_stats(
     thr = int(round(steep_rise_run * 8.0 * grid.res * quant))
     thr2 = thr * thr
 
-    out_schema = (
-        "tx long, ty long, n_interior long, n_steep long, max_rr2 long"
-    )
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
-        c = canvas
-        nx = (
-            (c[0:h, 2:w + 2] + 2 * c[1:h + 1, 2:w + 2] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[1:h + 1, 0:w] + c[2:h + 2, 0:w])
-        )
-        ny = (
-            (c[2:h + 2, 0:w] + 2 * c[2:h + 2, 1:w + 1] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[0:h, 1:w + 1] + c[0:h, 2:w + 2])
-        )
-        rr2 = nx * nx + ny * ny
-        rr2_in = rr2[full]
+    def stencil(canvas, mask, w, h, tx, ty):
+        full = _interior(mask, w, h)
+        nx, ny = _horn(canvas, w, h)
+        rr2_in = (nx * nx + ny * ny)[full]
         n_int = int(full.sum())
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_interior": [n_int],
-                "n_steep": [int((rr2_in > thr2).sum()) if n_int else 0],
-                "max_rr2": [int(rr2_in.max()) if n_int else 0],
-            }
-        )
+        return {
+            "n_interior": n_int,
+            "n_steep": int((rr2_in > thr2).sum()) if n_int else 0,
+            "max_rr2": int(rr2_in.max()) if n_int else 0,
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(
+        tiles, grid, quant, "n_interior long, n_steep long, max_rr2 long",
+        stencil,
+    )
     denom = 8.0 * grid.res * quant
     return stats.select(
         "tx", "ty", "n_interior", "n_steep", "max_rr2",
@@ -315,50 +365,29 @@ def hillshade_tile_stats(
         grid.res, quant, azimuth_deg, altitude_deg
     )
 
-    out_schema = (
-        "tx long, ty long, n_interior long, sum_hs long, "
-        "min_hs long, max_hs long"
-    )
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
-        c = canvas
-        nx = (
-            (c[0:h, 2:w + 2] + 2 * c[1:h + 1, 2:w + 2] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[1:h + 1, 0:w] + c[2:h + 2, 0:w])
-        )
-        ny = (
-            (c[2:h + 2, 0:w] + 2 * c[2:h + 2, 1:w + 1] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[0:h, 1:w + 1] + c[0:h, 2:w + 2])
-        )
+    def stencil(canvas, mask, w, h, tx, ty):
+        full = _interior(mask, w, h)
+        nx, ny = _horn(canvas, w, h)
         dnx = nx[full].astype(np.float64)
         dny = ny[full].astype(np.float64)
         n_int = int(full.sum())
         if not n_int:
-            return pd.DataFrame(
-                {"tx": [tx], "ty": [ty], "n_interior": [0],
-                 "sum_hs": [0], "min_hs": [0], "max_hs": [0]}
-            )
+            return {"n_interior": 0, "sum_hs": 0, "min_hs": 0, "max_hs": 0}
         # fixed association order — mirrored verbatim in the oracle SQL
         num = (c0 - lx * dnx) - ly * dny
         den = np.sqrt((d2 + dnx * dnx) + dny * dny)
         hs = np.floor(np.maximum(255.0 * (num / den), 0.0) + 0.5).astype(
             np.int64
         )
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_interior": [n_int],
-                "sum_hs": [int(hs.sum())],
-                "min_hs": [int(hs.min())], "max_hs": [int(hs.max())],
-            }
-        )
+        return {
+            "n_interior": n_int, "sum_hs": int(hs.sum()),
+            "min_hs": int(hs.min()), "max_hs": int(hs.max()),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(
+        tiles, grid, quant,
+        "n_interior long, sum_hs long, min_hs long, max_hs long", stencil,
+    )
     return stats.select(
         "tx", "ty", "n_interior", "sum_hs", "min_hs", "max_hs",
         F.round(
@@ -369,14 +398,15 @@ def hillshade_tile_stats(
     )
 
 
-# D8 directions in ESRI code-ascending order: (code, dx, dy, diag?).
-# dy is in GRID axis orientation (iy grows northwards in the fixture),
-# so "S" here means iy−1; the codes are a fixed enumeration, not a
-# compass claim.
-_D8 = (
-    (1, 1, 0, False), (2, 1, 1, True), (4, 0, 1, False), (8, -1, 1, True),
-    (16, -1, 0, False), (32, -1, -1, True), (64, 0, -1, False),
-    (128, 1, -1, True),
+# D8 directions in ESRI code-ascending order: (code, dx, dy, weight),
+# weight 2 for a cardinal and 1 for a diagonal neighbour — the
+# exact-integer comparator key dz²·weight of flow_direction_counts here
+# and of hydro.d8_downstream on the macro grid.  dy is in GRID axis
+# orientation (iy grows northwards in the fixture), so "S" here means
+# iy−1; the codes are a fixed enumeration, not a compass claim.
+D8_DIRS = (
+    (1, 1, 0, 2), (2, 1, 1, 1), (4, 0, 1, 2), (8, -1, 1, 1),
+    (16, -1, 0, 2), (32, -1, -1, 1), (64, 0, -1, 2), (128, 1, -1, 1),
 )
 
 
@@ -399,36 +429,24 @@ def flow_direction_counts(
     (flat/pit).  One halo exchange, one tile-keyed shuffle, ≤ 9 rows
     per tile out.
     """
-    out_schema = "tx long, ty long, code long, n_px long"
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
+    def stencil(canvas, mask, w, h, tx, ty):
         z = canvas[1:h + 1, 1:w + 1]
         best_key = np.full((h, w), -1, dtype=np.int64)
         best_code = np.zeros((h, w), dtype=np.int64)
-        for code, dx, dy, diag in _D8:
+        for code, dx, dy, weight in D8_DIRS:
             nb = canvas[1 + dy:1 + dy + h, 1 + dx:1 + dx + w]
             dz = z - nb
-            key = dz * dz * (1 if diag else 2)
+            key = dz * dz * weight
             key = np.where(dz > 0, key, np.int64(-1))
             upd = key > best_key  # strict: earlier (smaller) code wins ties
             best_key = np.where(upd, key, best_key)
             best_code = np.where(upd, code, best_code)
-        codes, counts = np.unique(best_code[full], return_counts=True)
-        return pd.DataFrame(
-            {
-                "tx": tx, "ty": ty,
-                "code": codes.astype(np.int64),
-                "n_px": counts.astype(np.int64),
-            }
+        codes, counts = np.unique(
+            best_code[_interior(mask, w, h)], return_counts=True
         )
+        return {"code": codes.astype(np.int64), "n_px": counts.astype(np.int64)}
 
-    parts = _halo_parts(tiles, grid, quant)
-    return parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    return _halo_stats(tiles, grid, quant, "code long, n_px long", stencil)
 
 
 # 45°-wide aspect octants with bin edges at exact multiples of 45° —
@@ -503,35 +521,17 @@ def aspect_octant_counts(
     executes anywhere.  Flat pixels (nx = ny = 0) report octant -1.
     One halo exchange, one tile-keyed shuffle, <= 9 rows per tile out.
     """
-    out_schema = "tx long, ty long, octant long, n_px long"
+    def stencil(canvas, mask, w, h, tx, ty):
+        full = _interior(mask, w, h)
+        nx, ny = _horn(canvas, w, h)
+        codes, counts = np.unique(
+            _octant_of(-nx[full], -ny[full]), return_counts=True
+        )
+        return {
+            "octant": codes.astype(np.int64), "n_px": counts.astype(np.int64),
+        }
 
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
-        c = canvas
-        nx = (
-            (c[0:h, 2:w + 2] + 2 * c[1:h + 1, 2:w + 2] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[1:h + 1, 0:w] + c[2:h + 2, 0:w])
-        )
-        ny = (
-            (c[2:h + 2, 0:w] + 2 * c[2:h + 2, 1:w + 1] + c[2:h + 2, 2:w + 2])
-            - (c[0:h, 0:w] + 2 * c[0:h, 1:w + 1] + c[0:h, 2:w + 2])
-        )
-        oct_ = _octant_of(-nx[full], -ny[full])
-        codes, counts = np.unique(oct_, return_counts=True)
-        return pd.DataFrame(
-            {
-                "tx": tx, "ty": ty,
-                "octant": codes.astype(np.int64),
-                "n_px": counts.astype(np.int64),
-            }
-        )
-
-    parts = _halo_parts(tiles, grid, quant)
-    return parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    return _halo_stats(tiles, grid, quant, "octant long, n_px long", stencil)
 
 
 def ruggedness_tile_stats(
@@ -556,17 +556,8 @@ def ruggedness_tile_stats(
     the rest of the focal family; interior-pixel semantics match
     slope_tile_stats.
     """
-    out_schema = (
-        "tx long, ty long, n_interior long, n_ridge long, "
-        "sum_tri long, max_tri long, max_rough long"
-    )
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
+    def stencil(canvas, mask, w, h, tx, ty):
+        full = _interior(mask, w, h)
         z = canvas[1:h + 1, 1:w + 1]
         tpi8 = 8 * z.copy()
         tri = np.zeros((h, w), dtype=np.int64)
@@ -583,22 +574,22 @@ def ruggedness_tile_stats(
                 np.minimum(wmin, nb, out=wmin)
         n_int = int(full.sum())
         if not n_int:
-            return pd.DataFrame(
-                {"tx": [tx], "ty": [ty], "n_interior": [0], "n_ridge": [0],
-                 "sum_tri": [0], "max_tri": [0], "max_rough": [0]}
-            )
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_interior": [n_int],
-                "n_ridge": [int((tpi8[full] > 0).sum())],
-                "sum_tri": [int(tri[full].sum())],
-                "max_tri": [int(tri[full].max())],
-                "max_rough": [int((wmax - wmin)[full].max())],
-            }
-        )
+            return {"n_interior": 0, "n_ridge": 0, "sum_tri": 0,
+                    "max_tri": 0, "max_rough": 0}
+        return {
+            "n_interior": n_int,
+            "n_ridge": int((tpi8[full] > 0).sum()),
+            "sum_tri": int(tri[full].sum()),
+            "max_tri": int(tri[full].max()),
+            "max_rough": int((wmax - wmin)[full].max()),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(
+        tiles, grid, quant,
+        "n_interior long, n_ridge long, sum_tri long, max_tri long, "
+        "max_rough long",
+        stencil,
+    )
     return stats.select(
         "tx", "ty", "n_interior", "n_ridge", "sum_tri", "max_tri",
         "max_rough",
@@ -634,13 +625,9 @@ def euler_tile_stats(
     exchange and integer partial sums, never a global label-merge.
     scikit-image ``euler_number`` semantics; all counts exact int64.
     """
-    out_schema = (
-        "tx long, ty long, n_green long, c1 long, c3 long, cd long"
-    )
     n_tx, n_ty = grid.n_tiles_x, grid.n_tiles_y
 
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         m = (canvas > threshold_q).astype(np.int64)  # halo/out-of-raster = 0
         # windows whose top-left CANVAS coord is (cx, cy): bottom-right
         # pixel is global (gx0-1+cx+1, gy0-1+cy+1) — in-tile for
@@ -655,18 +642,14 @@ def euler_tile_stats(
         s = a + b + c + d
         cd = int((((a == 1) & (d == 1) & (s == 2)).sum())
                  + (((b == 1) & (c == 1) & (s == 2)).sum()))
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty],
-                "n_green": [int(m[1:h + 1, 1:w + 1].sum())],
-                "c1": [int((s == 1).sum())],
-                "c3": [int((s == 3).sum())],
-                "cd": [cd],
-            }
-        )
+        return {
+            "n_green": int(m[1:h + 1, 1:w + 1].sum()),
+            "c1": int((s == 1).sum()), "c3": int((s == 3).sum()), "cd": cd,
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(
+        tiles, grid, quant, "n_green long, c1 long, c3 long, cd long", stencil
+    )
     return stats.select(
         "tx", "ty", "n_green", "c1", "c3", "cd",
         (F.col("c1") - F.col("c3") + 2 * F.col("cd")).alias("euler_term"),
@@ -691,11 +674,9 @@ def edge_density_tile_stats(
     integer partial sums.  Counts exact int64; the single multiply by
     ``res`` runs in Catalyst.
     """
-    out_schema = "tx long, ty long, h_edges long, v_edges long"
     n_tx, n_ty = grid.n_tiles_x, grid.n_tiles_y
 
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         m = (canvas > threshold_q).astype(np.int64)
         ex = w + (1 if tx == n_tx - 1 else 0)
         ey = h + (1 if ty == n_ty - 1 else 0)
@@ -706,16 +687,13 @@ def edge_density_tile_stats(
         # vertical pairs: lower pixel at canvas cy in [0, ey-1]
         vl = m[0:ey, 1:w + 1]
         vu = m[1:ey + 1, 1:w + 1]
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty],
-                "h_edges": [int((hl != hr).sum())],
-                "v_edges": [int((vl != vu).sum())],
-            }
-        )
+        return {
+            "h_edges": int((hl != hr).sum()), "v_edges": int((vl != vu).sum()),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(
+        tiles, grid, quant, "h_edges long, v_edges long", stencil
+    )
     return stats.select(
         "tx", "ty", "h_edges", "v_edges",
         (F.col("h_edges") + F.col("v_edges")).alias("n_edges"),
@@ -748,33 +726,25 @@ def majority_tile_counts(
     fixtures); counts are exact integers end to end, so there is no
     FP anywhere.  Same single halo exchange as the rest of the family.
     """
-    out_schema = "tx long, ty long, mode_class long, n_px long"
     classes = sorted(int(c) for c in class_values)
 
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         best_cnt = np.zeros((h, w), dtype=np.int64)
         best_cls = np.full((h, w), np.int64(classes[0]), dtype=np.int64)
         for cls in classes:  # ascending: strict > keeps the smallest on tie
-            cnt = np.zeros((h, w), dtype=np.int64)
-            hit = ((canvas == cls) & (mask == 1)).astype(np.int64)
-            for dy in (0, 1, 2):
-                for dx in (0, 1, 2):
-                    cnt += hit[dy:dy + h, dx:dx + w]
+            cnt = _box3((canvas == cls) & (mask == 1), w, h)
             upd = cnt > best_cnt
             best_cnt = np.where(upd, cnt, best_cnt)
             best_cls = np.where(upd, cls, best_cls)
         codes, counts = np.unique(best_cls, return_counts=True)
-        return pd.DataFrame(
-            {
-                "tx": tx, "ty": ty,
-                "mode_class": codes.astype(np.int64),
-                "n_px": counts.astype(np.int64),
-            }
-        )
+        return {
+            "mode_class": codes.astype(np.int64),
+            "n_px": counts.astype(np.int64),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    return parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    return _halo_stats(
+        tiles, grid, quant, "mode_class long, n_px long", stencil
+    )
 
 
 def marching_squares_counts(
@@ -797,10 +767,7 @@ def marching_squares_counts(
     counts, no global stitching.  The threshold compare runs on exact
     int64 quantised values, so an engine pair can never disagree about
     which side of the iso-level a pixel falls."""
-    out_schema = "tx long, ty long, case_id long, n_win long"
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         m = canvas > threshold_q
         ok = mask == 1
         valid = (
@@ -814,16 +781,11 @@ def marching_squares_counts(
             + 8 * m[2:h + 2, 2:w + 2]
         )
         codes, counts = np.unique(case[valid], return_counts=True)
-        return pd.DataFrame(
-            {
-                "tx": tx, "ty": ty,
-                "case_id": codes.astype(np.int64),
-                "n_win": counts.astype(np.int64),
-            }
-        )
+        return {
+            "case_id": codes.astype(np.int64), "n_win": counts.astype(np.int64),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    return parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    return _halo_stats(tiles, grid, quant, "case_id long, n_win long", stencil)
 
 
 def pyramid_tile_stats(
@@ -858,12 +820,7 @@ def pyramid_tile_stats(
     def emit(batches):
         for pdf in batches:
             rows = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                arr = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
-                cur = arr
+            for t, cur in _quantized_tiles(pdf, quant):
                 for lv in range(1, levels + 1):
                     hh, ww = cur.shape
                     cur = cur.reshape(hh // 2, 2, ww // 2, 2).sum(axis=(1, 3))
@@ -919,17 +876,8 @@ def curvature_class_counts(
     (≈ 8e17).  Interior-only like every halo operator; one tile-keyed
     shuffle, ≤ 1 row per tile out.
     """
-    out_schema = (
-        "tx long, ty long, n_interior long, n_flat long, "
-        "n_prof_pos long, n_prof_neg long, n_plan_pos long, n_plan_neg long"
-    )
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
-        full = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                full &= mask[dy:dy + h, dx:dx + w] == 1
+    def stencil(canvas, mask, w, h, tx, ty):
+        full = _interior(mask, w, h)
 
         def z(dx: int, dy: int) -> np.ndarray:
             return canvas[1 + dy:1 + dy + h, 1 + dx:1 + dx + w]
@@ -944,21 +892,21 @@ def curvature_class_counts(
         pl = 4 * d * hh * hh + 4 * e * g * g - f * g * hh
         flat = (g == 0) & (hh == 0)
         live = full & ~flat
-        n_int = int(full.sum())
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty],
-                "n_interior": [n_int],
-                "n_flat": [int((full & flat).sum())],
-                "n_prof_pos": [int((live & (p > 0)).sum())],
-                "n_prof_neg": [int((live & (p < 0)).sum())],
-                "n_plan_pos": [int((live & (pl > 0)).sum())],
-                "n_plan_neg": [int((live & (pl < 0)).sum())],
-            }
-        )
+        return {
+            "n_interior": int(full.sum()),
+            "n_flat": int((full & flat).sum()),
+            "n_prof_pos": int((live & (p > 0)).sum()),
+            "n_prof_neg": int((live & (p < 0)).sum()),
+            "n_plan_pos": int((live & (pl > 0)).sum()),
+            "n_plan_neg": int((live & (pl < 0)).sum()),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    return parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    return _halo_stats(
+        tiles, grid, quant,
+        "n_interior long, n_flat long, n_prof_pos long, n_prof_neg long, "
+        "n_plan_pos long, n_plan_neg long",
+        stencil,
+    )
 
 
 def core_area_tile_stats(
@@ -980,25 +928,14 @@ def core_area_tile_stats(
     the quad counters.  One halo exchange, per-tile NumPy erosion (the
     AND of nine shifted views), exact integer counts; core_pct is one
     division + round-6 (NULL where the tile has no mask)."""
-    out_schema = "tx long, ty long, n_mask long, n_core long"
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, _mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         m = canvas > threshold_q
-        core = np.ones((h, w), dtype=bool)
-        for dy in (0, 1, 2):
-            for dx in (0, 1, 2):
-                core &= m[dy:dy + h, dx:dx + w]
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty],
-                "n_mask": [int(m[1:h + 1, 1:w + 1].sum())],
-                "n_core": [int(core.sum())],
-            }
-        )
+        return {
+            "n_mask": int(m[1:h + 1, 1:w + 1].sum()),
+            "n_core": int((_box3(m, w, h) == 9).sum()),
+        }
 
-    parts = _halo_parts(tiles, grid, quant)
-    stats = parts.groupBy("dtx", "dty").applyInPandas(assemble, schema=out_schema)
+    stats = _halo_stats(tiles, grid, quant, "n_mask long, n_core long", stencil)
     return stats.select(
         "tx", "ty", "n_mask", "n_core",
         F.when(
@@ -1034,11 +971,8 @@ def cell_value_sums(
     def emit(batches):
         for pdf in batches:
             rows = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                q = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
+            for t, q in _quantized_tiles(pdf, quant):
+                h, w = q.shape
                 ix = int(t.tx) * tile_px + np.arange(w)
                 iy = int(t.ty) * tile_px + np.arange(h)
                 gx = ix // cell_px
@@ -1091,13 +1025,9 @@ def haar_energy_tile_stats(
     def emit(batches):
         for pdf in batches:
             rows = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                if w % 2 or h % 2:
+            for t, q in _quantized_tiles(pdf, quant):
+                if q.shape[0] % 2 or q.shape[1] % 2:
                     raise ValueError("haar level-1 needs even tile dims")
-                q = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
                 a = q[0::2, 0::2]
                 b = q[0::2, 1::2]
                 c = q[1::2, 0::2]
@@ -1141,14 +1071,10 @@ def focal_entropy_tile_stats(
     box sums; each −(c/9)·ln(c/9) term is 1e-9-quantized on the libm
     expression both engines share and summed as exact int64; the one
     FP step (mean de-quantization) runs in Catalyst."""
-    parts = _halo_parts(tiles, grid, quant)
     npx_x, npx_y = grid.npx_x, grid.npx_y
     span = vmax_q - vmin_q
 
-    out_schema = "tx long, ty long, n_windows long, ent_q_sum long"
-
-    def assemble(kdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, canvas, mask, w, h = _assemble_canvas(kdf, grid)
+    def stencil(canvas, mask, w, h, tx, ty):
         gx0, gy0 = tx * grid.tile_px, ty * grid.tile_px
         cls = np.clip(
             ((canvas - vmin_q) * bins) // span, 0, bins - 1
@@ -1162,27 +1088,18 @@ def focal_entropy_tile_stats(
         )
         ent = np.zeros((h, w), dtype=np.int64)
         for k in range(bins):
-            mk = (cls == k).astype(np.int64)
-            cnt = np.zeros((h, w), dtype=np.int64)
-            for dy in (0, 1, 2):
-                for dx in (0, 1, 2):
-                    cnt += mk[dy:dy + h, dx:dx + w]
+            cnt = _box3(cls == k, w, h)
             nz = cnt > 0
             c = cnt[nz].astype(np.float64)
             t = np.floor(-(c / 9.0) * np.log(c / 9.0) * 1e9 + 0.5)
-            buf = np.zeros((h, w), dtype=np.int64)
-            buf[nz] = t.astype(np.int64)
-            ent += buf
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty],
-                "n_windows": [int(interior.sum())],
-                "ent_q_sum": [int(ent[interior].sum())],
-            }
-        )
+            ent[nz] += t.astype(np.int64)
+        return {
+            "n_windows": int(interior.sum()),
+            "ent_q_sum": int(ent[interior].sum()),
+        }
 
-    stats = parts.groupBy("dtx", "dty").applyInPandas(
-        assemble, schema=out_schema
+    stats = _halo_stats(
+        tiles, grid, quant, "n_windows long, ent_q_sum long", stencil
     )
     return stats.select(
         "tx", "ty", "n_windows", "ent_q_sum",

@@ -44,22 +44,17 @@ from pyspark.sql import functions as F
 
 from ..engine.iterate import fixpoint
 from ..geo.grid import GridSpec
-from .focal import quantize_half_away
+from .focal import D8_DIRS, _quantized_tiles
 
 # round cap of the pointer-doubling loops: after r rounds a pointer
 # spans 2**r downslope steps, so 64 rounds outlast any D8 path and the
 # loops always stop on their own convergence test first
 _DOUBLING_ROUNDS = 64
 
+# D8_DIRS (esri_code, dx, dy, weight) is focal's table, re-exported for
+# the gate queries' oracle SQL (driver_queries reads it from here)
 __all__ = ["D8_DIRS", "macro_cells", "d8_downstream", "flow_accumulation",
            "watershed_labels", "flow_path_length"]
-
-# (esri_code, dx, dy, weight): weight 2 for cardinal, 1 for diagonal —
-# the exact-integer D8 comparator shared with focal.flow_direction_counts
-D8_DIRS = (
-    (1, 1, 0, 2), (2, 1, 1, 1), (4, 0, 1, 2), (8, -1, 1, 1),
-    (16, -1, 0, 2), (32, -1, -1, 1), (64, 0, -1, 2), (128, 1, -1, 1),
-)
 
 
 def macro_cells(
@@ -75,11 +70,8 @@ def macro_cells(
     def parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                arr = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
+            for t, arr in _quantized_tiles(pdf, quant):
+                h, w = arr.shape
                 gx0 = int(t.tx) * tile_px
                 gy0 = int(t.ty) * tile_px
                 mx = (gx0 + np.arange(w)) // factor

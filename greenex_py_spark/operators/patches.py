@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo.grid import GridSpec
-from .focal import quantize_half_away
+from .focal import _quantized_tiles
 
 __all__ = [
     "tile_patch_parts", "patch_sizes", "patch_size_histogram",
@@ -139,11 +139,8 @@ def tile_patch_parts(
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple[int, int, int, int]] = []
-            for t in pdf.itertuples():
-                w, h = int(t.w), int(t.h)
-                arr = quantize_half_away(
-                    np.asarray(t.px, dtype=np.float64).reshape(h, w), quant
-                )
+            for t, arr in _quantized_tiles(pdf, quant):
+                h, w = arr.shape
                 mask = arr > 0
                 tx, ty = int(t.tx), int(t.ty)
                 gx0, gy0 = tx * tile_px, ty * tile_px

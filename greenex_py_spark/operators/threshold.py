@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..geo.grid import GridSpec
-from .focal import quantize_half_away
+from .focal import _quantized_tiles
 
 __all__ = ["otsu_threshold"]
 
@@ -58,8 +58,7 @@ def otsu_threshold(
     """
     def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for px in pdf["px"]:
-                lv = quantize_half_away(np.asarray(px, dtype=np.float64), quant)
+            for _, lv in _quantized_tiles(pdf, quant, flat=True):
                 levels, counts = np.unique(lv, return_counts=True)
                 yield pd.DataFrame(
                     {"level": levels, "cnt": counts.astype(np.int64)}

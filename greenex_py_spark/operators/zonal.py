@@ -711,13 +711,11 @@ def histogram_equalize_stats(
     partials frame is localCheckpoint'd because BOTH the histogram
     and the join-back consume it (the no-CSE rule)."""
     from ..engine.rank import global_cumsum
+    from .focal import _quantized_tiles
 
     def _hist(it):
         for pdf in it:
-            for t in pdf.itertuples():
-                v = np.asarray(t.px, dtype=np.float64)
-                vi = (np.sign(v * quant)
-                      * np.floor(np.abs(v * quant) + 0.5)).astype(np.int64)
+            for t, vi in _quantized_tiles(pdf, quant, flat=True):
                 u, c = np.unique(vi, return_counts=True)
                 yield pd.DataFrame(
                     {"tx": int(t.tx), "ty": int(t.ty), "v": u,

@@ -18,19 +18,20 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scripts.check_queries import norm_frame  # noqa: E402
 from scripts.xxh64_ref import xxh64_signed  # noqa: E402
 
 SFS = ["0.001", "0.01", "0.1"]
-REPO = "/root/repo"
 
 
 def rnd(x: float, dp: int) -> float:
@@ -296,7 +297,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .appName("pin-oracles")

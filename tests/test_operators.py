@@ -497,6 +497,52 @@ def test_isochrone_hole_fill(spark):
     )
 
 
+def test_network_greenspace_pct_reads_rings(spark):
+    """An isochrone over the notch of an L-shaped park: a layer with
+    ``rings`` gives the polygon's share of the AoI, its bbox-only twin
+    the bbox share (the notch counted green)."""
+    from greenex_py_spark.operators.network import greenspace_pct_isochrone
+
+    x0, y0 = 101000.0, 451000.0
+    ring = [x0, y0, x0 + 300, y0, x0 + 300, y0 + 120, x0 + 120, y0 + 120,
+            x0 + 120, y0 + 300, x0, y0 + 300]
+    # one edge from the L's vertical arm across the notch
+    ax, ay, bx, by = x0 + 60, y0 + 200, x0 + 260, y0 + 200
+    nodes = spark.createDataFrame(pd.DataFrame(
+        {"node_id": [1, 2], "x": [ax, bx], "y": [ay, by]}))
+    edges = spark.createDataFrame(pd.DataFrame(
+        {"src": [1, 2], "dst": [2, 1], "length": [200.0, 200.0]}))
+    pts = spark.createDataFrame(pd.DataFrame({"id": [7], "x": [ax], "y": [ay]}))
+    rings = spark.createDataFrame(
+        [(1, [ring], x0, y0, x0 + 300, y0 + 300)],
+        "gs_id long, rings array<array<double>>, minx double, miny double, "
+        "maxx double, maxy double",
+    )
+    ox, oy, res = x0 - 500.0, y0 - 500.0, 5.0
+
+    def pct(layer):
+        out = greenspace_pct_isochrone(
+            pts, nodes, edges, layer, radius=350.0, res=res,
+            origin_x=ox, origin_y=oy, npx=400,
+        ).collect()
+        return out[0]["greenspace_cover"]
+
+    X, Y = np.meshgrid(ox + (np.arange(400) + 0.5) * res,
+                       oy + (np.arange(400) + 0.5) * res)
+    t = np.clip((X - ax) / (bx - ax), 0.0, 1.0)
+    aoi = (X - (ax + t * (bx - ax))) ** 2 + (Y - ay) ** 2 <= 25.0 ** 2
+    in_bbox = (X >= x0) & (X < x0 + 300) & (Y >= y0) & (Y < y0 + 300)
+    in_l = in_bbox & ((X < x0 + 120) | (Y < y0 + 120))
+
+    def share(green):
+        raw = (green & aoi).sum() / aoi.sum() * 100.0
+        return f"{np.floor(raw * 100.0 + 0.5) / 100.0}%"
+
+    assert share(in_l) != share(in_bbox)
+    assert pct(rings) == share(in_l)
+    assert pct(rings.drop("rings")) == share(in_bbox)
+
+
 def test_streetview_sampler_step_scheme(spark):
     """select_points_on_road_network semantics: one direction per edge
     (T6), points every 50 m endpoint-excluded (G6 step), geometry dedup
@@ -3593,6 +3639,79 @@ def _two_tile_fixture(spark, z):
     return tiles, grid
 
 
+def _tiled(spark, z, tile_px):
+    """``z`` (rows = iy) cut into ``tile_px`` tiles, with its grid."""
+    import numpy as np
+    from greenex_py_spark.geo.grid import GridSpec
+
+    h_all, w_all = z.shape
+    grid = GridSpec(origin_x=0.0, origin_y=0.0, res=1.0, tile_px=tile_px,
+                    npx_x=w_all, npx_y=h_all)
+    rows = []
+    for ty in range(grid.n_tiles_y):
+        for tx in range(grid.n_tiles_x):
+            sub = z[ty * tile_px:(ty + 1) * tile_px, tx * tile_px:(tx + 1) * tile_px]
+            rows.append((tx, ty, sub.shape[1], sub.shape[0],
+                         np.asarray(sub, dtype=float).ravel().tolist()))
+    tiles = spark.createDataFrame(
+        rows, "tx long, ty long, w long, h long, px array<double>"
+    )
+    return tiles, grid
+
+
+def test_halo_operators_are_tile_size_invariant(spark):
+    """Each of the 13 halo operators over 64-px and 256-px tiles of one
+    300×200 raster: the raster-wide totals agree (counts and sums add,
+    min/max fold, histograms add), so no tile seam loses or doubles a
+    window."""
+    import numpy as np
+    from greenex_py_spark.operators import focal as fo
+
+    rng = np.random.RandomState(11)
+    iy, ix = np.mgrid[0:200, 0:300]
+    z = np.round(np.sin(ix / 17.0) * np.cos(iy / 13.0)
+                 + rng.uniform(-0.3, 0.3, (200, 300)), 3) / 1.5
+    lc = np.array([0, 10, 30, 50, 80])[(ix // 7 + iy // 5 + rng.randint(0, 2, (200, 300))) % 5]
+    add, lo, hi = "sum", "min", "max"
+    cases = [
+        (fo.focal_tile_stats, {}, None,
+         {"n_px": add, "tot_focal": add, "min_focal": lo, "max_focal": hi}),
+        (fo.slope_tile_stats, {"quant": 1e3, "steep_rise_run": 0.05}, None,
+         {"n_interior": add, "n_steep": add, "max_rr2": hi}),
+        (fo.hillshade_tile_stats, {"quant": 1e3}, None,
+         {"n_interior": add, "sum_hs": add, "min_hs": lo, "max_hs": hi}),
+        (fo.flow_direction_counts, {"quant": 1e3}, "code", {"n_px": add}),
+        (fo.aspect_octant_counts, {"quant": 1e3}, "octant", {"n_px": add}),
+        (fo.ruggedness_tile_stats, {"quant": 1e3}, None,
+         {"n_interior": add, "n_ridge": add, "sum_tri": add, "max_tri": hi,
+          "max_rough": hi}),
+        (fo.euler_tile_stats, {}, None,
+         {"n_green": add, "c1": add, "c3": add, "cd": add, "euler_term": add}),
+        (fo.edge_density_tile_stats, {}, None, {"h_edges": add, "v_edges": add}),
+        (fo.majority_tile_counts, {"class_values": [0, 10, 30, 50, 80]},
+         "mode_class", {"n_px": add}),
+        (fo.marching_squares_counts, {}, "case_id", {"n_win": add}),
+        (fo.curvature_class_counts, {"quant": 1e3}, None,
+         {c: add for c in ("n_interior", "n_flat", "n_prof_pos", "n_prof_neg",
+                           "n_plan_pos", "n_plan_neg")}),
+        (fo.core_area_tile_stats, {}, None, {"n_mask": add, "n_core": add}),
+        (fo.focal_entropy_tile_stats, {}, None,
+         {"n_windows": add, "ent_q_sum": add}),
+    ]
+    tiled = {px: (_tiled(spark, z, px), _tiled(spark, lc, px)) for px in (64, 256)}
+    assert tiled[64][0][1].n_tiles_x * tiled[64][0][1].n_tiles_y == 20
+    for fn, kw, key, fold in cases:
+        totals = []
+        for px in (64, 256):
+            tiles, grid = tiled[px][1 if key == "mode_class" else 0]
+            pdf = fn(tiles, grid, **kw).toPandas()
+            if key is None:
+                totals.append({c: int(pdf[c].agg(f)) for c, f in fold.items()})
+            else:
+                totals.append(pdf.groupby(key)[list(fold)].sum().to_dict())
+        assert totals[0] == totals[1], fn.__name__
+
+
 def test_hillshade_tile_stats_cross_tile(spark):
     """Tiled hillshade == global-array brute force (same constant
     chain), including seam pixels; grey levels bounded to 0..255."""
@@ -3641,7 +3760,7 @@ def test_flow_direction_counts_hand(spark):
     flat plateau (code 0), cardinal/diagonal competition, and an exact
     two-cardinal tie (code-ascending break)."""
     import numpy as np
-    from greenex_py_spark.operators.focal import _D8, flow_direction_counts
+    from greenex_py_spark.operators.focal import D8_DIRS, flow_direction_counts
 
     # cone + plateau: pixels at x<=2,y<=2 all share height 0 (flat+tie
     # region), rest fall away with distinct slopes
@@ -3660,11 +3779,11 @@ def test_flow_direction_counts_hand(spark):
     for y in range(1, 3):
         for x in range(1, 7):
             best_key, best_code = -1, 0
-            for code, dx, dy, diag in _D8:
+            for code, dx, dy, weight in D8_DIRS:
                 dz = int(q[y, x] - q[y + dy, x + dx])
                 if dz <= 0:
                     continue
-                key = dz * dz * (1 if diag else 2)
+                key = dz * dz * weight
                 if key > best_key:
                     best_key, best_code = key, code
             tx = x // 4

@@ -163,24 +163,6 @@ def test_line_length_and_polygon_cover():
         assert int(cell_of(np.array([x]), np.array([y]))[0]) in cover
 
 
-def test_geocode_arrow_matches_numpy_oracle(spark):
-    """geocode_arrow (pandas-UDF path) == the in-process NumPy
-    url_hash64+geocode_xy oracle, row for row.  (The codegen `geocode`
-    intentionally uses JVM xxhash64 instead — different hash family,
-    same distribution contract — so the two geocoders are each pinned
-    against their own oracle, not against each other.)"""
-    from greenex_py_spark.data.synth import geocode_arrow, geocode_xy, url_hash64
-
-    url_list = [f"https://site{i}.example/p/{i}" for i in range(200)]
-    urls = spark.createDataFrame([(u,) for u in url_list], "url string")
-    b = geocode_arrow(urls).toPandas().sort_values("url").reset_index(drop=True)
-    want_x, want_y = geocode_xy(url_hash64(pd.Series(sorted(url_list))))
-    np.testing.assert_allclose(b.x.to_numpy(), want_x, rtol=0, atol=0)
-    np.testing.assert_allclose(b.y.to_numpy(), want_y, rtol=0, atol=0)
-    # and the core-skew contract holds for both hash families
-    assert (b.x.between(100000, 110000)).all() and (b.y.between(450000, 460000)).all()
-
-
 def test_stage_metrics_measure_and_timed(spark, tmp_path):
     import json
 
@@ -291,6 +273,38 @@ def test_round_loops_checkpoint_through_fixpoint():
         if isinstance(n, ast.FunctionDef) and n.name == "localcheckpoint_fresh"
     ]
     assert stats_resets == ["iterate.py"]
+
+
+def test_halo_exchange_lives_in_one_scaffold():
+    """focal.py wires the halo exchange once: ``_halo_parts`` and
+    ``applyInPandas`` are referenced only inside ``_halo_stats``, so a
+    focal operator is a stencil handed to it.  And every map-side tile
+    kernel quantises pixels through ``focal._quantized_tiles``: no other
+    function in the package calls ``quantize_half_away``."""
+    import ast
+    import pathlib
+
+    import greenex_py_spark
+
+    pkg = pathlib.Path(greenex_py_spark.__file__).parent
+
+    def refs(tree, names):
+        """(enclosing top-level function, name) of every reference."""
+        for top in tree.body:
+            for n in ast.walk(top):
+                name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+                if name in names:
+                    yield getattr(top, "name", None), name
+
+    focal = ast.parse((pkg / "operators" / "focal.py").read_text())
+    halo = sorted(set(refs(focal, {"_halo_parts", "applyInPandas"})))
+    assert halo == [("_halo_stats", "_halo_parts"), ("_halo_stats", "applyInPandas")]
+    quantizers = sorted(
+        f"{p.relative_to(pkg)}:{fn}"
+        for p in pkg.rglob("*.py")
+        for fn, _ in refs(ast.parse(p.read_text()), {"quantize_half_away"})
+    )
+    assert quantizers == ["operators/focal.py:_quantized_tiles"], quantizers
 
 
 def test_gridspec_from_tiles_roundtrip(spark):
