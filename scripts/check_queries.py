@@ -49,7 +49,7 @@ def main():
         sfs.append(args.pop(0))
     names = args or sorted(m.queries().keys())
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .appName("check")
