@@ -6,8 +6,9 @@ driver-city fixture for grid geometry (origin/res/tile size), welding
 them to one dataset.  ``GridSpec`` carries exactly the five numbers an
 operator needs; callers either pass it explicitly (the gate queries do —
 zero extra jobs) or let :func:`GridSpec.from_tiles` recover it from the
-tile table itself (two tiny agg jobs over tile *metadata* columns only —
-the pixel payload column is pruned from the scan).
+tile table itself: two tiny agg jobs over tile *metadata* columns only
+(the pixel payload column is pruned from the scan), run once per tile
+table and session (``engine.memo``), not once per call.
 
 Tile-table contract (S2 ingest, SURVEY.md §2.1): one row per tile with
 ``tx, ty, x0, y0, res, w, h, px`` where ``x0 = origin_x + tx·tile_px·res``
@@ -21,6 +22,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..engine.memo import memo
 
 
 @dataclass(frozen=True)
@@ -60,21 +63,30 @@ class GridSpec:
         max(w, h): a full (unclipped) tile in EITHER axis witnesses the
         pitch, which also covers rasters narrower than one tile in one
         axis; a raster smaller than a tile in both axes is a single
-        tile, for which any pitch ≥ its size is equivalent."""
-        r1 = tiles.agg(
-            F.max(F.greatest("w", "h")).alias("tile_px"), F.min("res").alias("res"),
-            F.max("res").alias("res2"),
-        ).first()
-        tile_px, res = int(r1["tile_px"]), float(r1["res"])
-        if float(r1["res2"]) != res:
-            raise ValueError(f"mixed-resolution tile table: {res} vs {r1['res2']}")
-        step = tile_px * res
-        r2 = tiles.agg(
-            F.min(F.col("x0") - F.col("tx") * step).alias("ox"),
-            F.min(F.col("y0") - F.col("ty") * step).alias("oy"),
-            F.max(F.col("tx") * tile_px + F.col("w")).alias("nx"),
-            F.max(F.col("ty") * tile_px + F.col("h")).alias("ny"),
-        ).first()
-        return GridSpec(
-            float(r2["ox"]), float(r2["oy"]), res, tile_px, int(r2["nx"]), int(r2["ny"])
-        )
+        tile, for which any pitch ≥ its size is equivalent.
+
+        The two agg jobs run on the first call over a tile table; later
+        calls over a semantically equal table in the same session read
+        the memoised spec (``engine.memo``; rewrite a tile file, then
+        ``clearCache()``)."""
+        return memo("grid_spec", [tiles], lambda: _grid_of(tiles))
+
+
+def _grid_of(tiles: DataFrame) -> GridSpec:
+    r1 = tiles.agg(
+        F.max(F.greatest("w", "h")).alias("tile_px"), F.min("res").alias("res"),
+        F.max("res").alias("res2"),
+    ).first()
+    tile_px, res = int(r1["tile_px"]), float(r1["res"])
+    if float(r1["res2"]) != res:
+        raise ValueError(f"mixed-resolution tile table: {res} vs {r1['res2']}")
+    step = tile_px * res
+    r2 = tiles.agg(
+        F.min(F.col("x0") - F.col("tx") * step).alias("ox"),
+        F.min(F.col("y0") - F.col("ty") * step).alias("oy"),
+        F.max(F.col("tx") * tile_px + F.col("w")).alias("nx"),
+        F.max(F.col("ty") * tile_px + F.col("h")).alias("ny"),
+    ).first()
+    return GridSpec(
+        float(r2["ox"]), float(r2["oy"]), res, tile_px, int(r2["nx"]), int(r2["ny"])
+    )

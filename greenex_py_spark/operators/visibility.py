@@ -171,7 +171,8 @@ def viewshed_gvi_points(
 
     ``grid`` describes the surface-tile geometry; ``None`` recovers it
     from the tile table metadata (GridSpec.from_tiles — two tiny agg
-    jobs; gate queries pass it explicitly).
+    jobs on the first call over a tile table, none on later calls in
+    the session; gate queries pass it explicitly).
 
     ``tiles``: union of dsm/dtm/green tile tables (same schema, distinct
     ``layer`` values).  The home-tiled sample points are materialized

@@ -173,7 +173,8 @@ def zonal_mean_std(
     """[id, mean_<p>, std_<p>] — circular-buffer zonal mean/std (A1).
 
     ``grid`` defaults to :func:`GridSpec.from_tiles` (recovered from the
-    tile table's own metadata — pass it explicitly to skip those jobs)."""
+    tile table's own metadata by two agg jobs on the first call over a
+    tile table, memoised for the session)."""
 
     def emit(pid, v, *_):
         if clip_min0:

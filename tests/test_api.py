@@ -281,32 +281,26 @@ def test_polygon_type_house_equals_centroid_points(spark):
                           buffer_type="euclidean", buffer_dist=200)
 
 
-def test_warm_api_calls_reuse_compiled_code(spark, pois, monkeypatch):
+def test_warm_api_calls_reuse_compiled_code(spark, pois):
     """A second run of each api call compiles no new code: every class
     of one pass over the api still sits in the codegen cache that
-    ``get_spark`` sizes.  The exception is the network calls'
-    ``_graph_fits_driver`` probe: a LIMIT's counter is named from a
-    JVM-global id, so its code is new on every call.  At Spark's
-    default 100 entries the pass (about 260 classes here; in the
-    benchmark's python_kernels workload ``gs_pct_network`` alone
+    ``get_spark`` sizes, and the per-dataset size probes (a LIMIT,
+    whose counter is named from a JVM-global id, so its code is new on
+    every run) ran once, on the first pass (``engine.memo``).  At
+    Spark's default 100 entries the pass (about 260 classes here; in
+    the benchmark's python_kernels workload ``gs_pct_network`` alone
     compiles 113) evicts its own classes, and the warm runs of every
     call but the euclidean greenspace % (whose classes the canopy call
-    just compiled) recompile 9 to 69 classes."""
-    from greenex_py_spark.operators import network
-
+    just compiled) recompile 9 to 69 classes.  Adaptive execution
+    numbers codegen stages in the order concurrent stages finish, so
+    ``get_spark`` keeps the stage id out of class names: with it, a
+    cached class now and then compiled again under a new name."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    probes = []
-    probe = network._graph_fits_driver
-
-    def counted(*args):
-        probes.append(args)
-        return probe(*args)
-
-    monkeypatch.setattr(network, "_graph_fits_driver", counted)
 
     # checkpointed like tables read from storage: over an in-memory local
-    # relation the optimizer folds a LIMIT away and the probe compiles nothing
+    # relation the optimizer folds a LIMIT away and a probe compiles nothing
     ndvi, landcover, rings, greens, nodes, edges, surface, images = (
         df.localCheckpoint() for df in (
             city.tiles_df(spark, "ndvi"),
@@ -348,29 +342,13 @@ def test_warm_api_calls_reuse_compiled_code(spark, pois, monkeypatch):
             min_greenspace_area=400, **net),
     }
 
-    def run(call) -> tuple[int, int]:
-        """(classes compiled, probes made) by one call run to a noop write."""
-        c0, p0 = compiles.getCount(), len(probes)
+    def run(call) -> int:
+        """Classes compiled by one call run to a noop write."""
+        c0 = compiles.getCount()
         call().write.format("noop").mode("overwrite").save()
-        return compiles.getCount() - c0, len(probes) - p0
+        return compiles.getCount() - c0
 
-    # Adaptive execution numbers a query's codegen stages in the order its
-    # concurrent stages finish, and the number is part of the generated
-    # class name: now and then a run recompiles cached code under a new
-    # stage id (gs_pct_network 6 instead of 4 in 1 of 8 warm passes).
-    # Without the id in the name the counts repeat exactly, and each
-    # probe compiles 2 classes.
-    with_id = spark.conf.get("spark.sql.codegen.useIdInClassName")
-    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
-    try:
-        for call in calls.values():
-            run(call)
-        warm = {name: run(call) for name, call in calls.items()}
-    finally:
-        spark.conf.set("spark.sql.codegen.useIdInClassName", with_id)
-    assert {name: n for name, (n, p) in warm.items()} == {
-        name: 2 * p for name, (n, p) in warm.items()
-    }
-    assert {name for name, (n, p) in warm.items() if p} == {
-        "mean_ndvi_network", "gs_pct_network", "access_network"
-    }
+    for call in calls.values():
+        run(call)
+    warm = {name: run(call) for name, call in calls.items()}
+    assert warm == {name: 0 for name in calls}
